@@ -281,8 +281,8 @@ def main() -> None:
         # checkpoints (sequential runner = O(one query) held storage).
         release_all()
         # Drain the ContextCleaner backlog in the UNTIMED inter-query
-        # region (r14 verdict item 6, cause named by
-        # tools/probe_bench_context_r15.py): broadcasts and shuffle
+        # region (r14 verdict item 6, cause named by a round-15 probe
+        # script, now in git history): broadcasts and shuffle
         # state are weak-ref-reclaimed only on a driver GC, which a
         # 48 GiB heap never triggers inside one bench session — the
         # backlog inflated later join-heavy queries 20-60% over their

@@ -77,8 +77,8 @@ def _shared_salt() -> str:
     price*(1-disc) formula would silently change proven TPC-H revenue
     semantics — all five are byte-stable since round 1, so widening the
     salt was free (the r10 ledger was migrated in the same commit, each
-    entry's swept text verified against the old salt first —
-    tools/migrate_ledger_salt_r10.py)."""
+    entry's swept text verified against the old salt first — the
+    one-off migration script is in git history)."""
     from datafusion_umami_spark import registry
 
     parts = []

@@ -20,11 +20,11 @@ BIGINT sums; no float ever appears).  Truncation loses a few micro-
 units of total mass per round, identically on every engine.
 
 100 TB notes: per iteration one shuffle keyed (dst) for the
-contribution aggregate and one broadcast-or-shuffle join back to the
-node list — work is O(|E|) per round with a FIXED round count (no
-convergence test ⇒ no driver-side collect at all).  Superseded
-checkpoints are unpersisted each round (block-manager usage stays
-O(|V|), not O(iterations × |V|)).
+contribution aggregate and one broadcast-or-shuffle join of the rank
+state onto the edge list — work is O(|E|) per round with a FIXED round
+count (no convergence test ⇒ no driver-side collect at all).
+Superseded checkpoints are unpersisted each round (block-manager usage
+stays O(|V|), not O(iterations × |V|)).
 """
 
 from __future__ import annotations
@@ -33,6 +33,7 @@ from pyspark.sql import DataFrame, Window
 from pyspark.sql import functions as F
 
 from datafusion_umami_spark.operators.connected_components import _free_checkpoint
+from datafusion_umami_spark.tables import parse_bytes
 
 MICRO = 1_000_000
 DAMP_NUM = 850_000  # 0.85 in micro-units
@@ -41,13 +42,12 @@ TELEPORT = 150_000  # (1 - 0.85) in micro-units
 
 def _damped_pr(mass_col: str = "mass") -> F.Column:
     """TELEPORT + floor(DAMP * mass / MICRO), the integer-exact damping
-    step shared by both iteration layouts.  Damping product in
-    DECIMAL(38,0): mass at a hub is bounded by total graph mass
-    (|V| * 1e6), so the BIGINT product 850_000 * mass would overflow
-    past ~1e7 nodes under ANSI.  DECIMAL keeps exactness to ~1e31;
-    FLOOR == DIV for the nonnegative operands.  (DuckDB side is already
-    safe: SUM(BIGINT) yields HUGEINT there, so its product never
-    overflows.)"""
+    step.  Damping product in DECIMAL(38,0): mass at a hub is bounded by
+    total graph mass (|V| * 1e6), so the BIGINT product 850_000 * mass
+    would overflow past ~1e7 nodes under ANSI.  DECIMAL keeps exactness
+    to ~1e31; FLOOR == DIV for the nonnegative operands.  (DuckDB side
+    is already safe: SUM(BIGINT) yields HUGEINT there, so its product
+    never overflows.)"""
     return (
         F.lit(TELEPORT)
         + F.expr(
@@ -57,176 +57,101 @@ def _damped_pr(mass_col: str = "mass") -> F.Column:
     ).cast("long").alias("pr")
 
 
-def pagerank(
-    edges: DataFrame,
-    iterations: int = 4,
-    stats: dict | None = None,
-    dedup_edges: bool = True,
-    full_in_degree: bool = False,
-) -> DataFrame:
+def pagerank(edges: DataFrame, iterations: int = 4) -> DataFrame:
     """Integer-exact PageRank.  `edges`: columns (src, dst), directed —
     pass both directions for an undirected graph.  Every node must
     appear as a src (no dangling mass handling; feed bidirectional
-    edges to guarantee it).  Returns (node, pr) with pr in micro-units.
+    edges to guarantee it), and the edge list must be DUPLICATE-FREE: a
+    repeated edge counts twice, and the operator does not pay an
+    |E|-shuffle distinct to defend against it (its one caller,
+    graph_pagerank_purchases, builds a distinct list by construction).
+    Returns (node, pr) with pr in micro-units for every src node.
 
-    `dedup_edges=False` skips the defensive `.distinct()` — a full
-    |E|-shuffle + aggregate — when the CALLER guarantees the edge list
-    is already duplicate-free (r14, guide §2.4 "a distinct on data that
-    is already unique" is an accidental shuffle).  Passing duplicates
-    with the flag off double-counts contributions, so only assert-known
-    inputs may use it (pinned equivalent on distinct inputs in
-    tests/test_fuzz.py).
-
-    `full_in_degree=True` (r15, guide §2.4) additionally guarantees
-    every node ALSO appears as a dst (in-degree >= 1 — automatic for a
-    bidirectional edge list).  Then every node receives mass every
-    round, so the per-round `deg LEFT JOIN contribs` is the identity
-    and the whole iteration restructures:
+    One join plus one keyed aggregate per round:
       - outdeg rides ON the edge list (one count window in the same
-        pass that materializes it) — the separate deg checkpoint and
-        the per-round |V|-row join + broadcast build disappear;
-      - round 0's state is the CONSTANT pr=MICRO, so its edges⋈state
-        join is a no-op — contribs are MICRO DIV outdeg off the edges.
-    Each round is ONE join (state onto edges) + ONE keyed aggregate.
-    Bit-identical to the default path on inputs satisfying the
-    guarantee (pinned in tests/test_fuzz.py); on inputs violating it
-    the default path keeps zero-in-degree nodes alive while this path
-    drops them, so only assert-known inputs may use it.
+        pass that checkpoints it) — no separate degree relation;
+      - round 0's state is the CONSTANT pr=MICRO, so its contribs are
+        MICRO DIV outdeg straight off the edges, no join;
+      - later rounds LEFT-join the state onto the edges.  The state
+        holds only nodes that received mass (in-degree >= 1); a src
+        missing from it has in-degree 0, so after round 0 its rank is
+        exactly TELEPORT — hence `coalesce(pr, TELEPORT)`;
+      - in the LAST round every edge also contributes a zero to its
+        src, so nodes with in-degree 0 come out of the final aggregate
+        too (at TELEPORT) without a join back to a node list.
+    With `iterations == 0` every src is returned at MICRO, lazily over
+    the input — no checkpoint is taken, so none can leak.
     """
     e = edges.select(
         F.col(edges.columns[0]).cast("long").alias("src"),
         F.col(edges.columns[1]).cast("long").alias("dst"),
     )
-    if dedup_edges:
-        e = e.distinct()
-    if full_in_degree:
-        return _pagerank_full_in_degree(e, iterations, stats)
-    e = e.localCheckpoint(eager=True)
-
-    # The node universe IS deg's key set (every node appears as a src by
-    # contract), so one aggregate doubles as node list + out-degrees —
-    # computed and checkpointed ONCE.  The iterated state carries
-    # (node, outdeg, pr) so each round is exactly one equi-join against
-    # the edges, one keyed aggregate, and one left join back to deg;
-    # recomputing nodes/deg lazily per round would add two shuffles and
-    # a join to every iteration.
-    deg = (
-        e.groupBy("src")
-        .agg(F.count("*").alias("outdeg"))
-        .withColumnRenamed("src", "node")
-    )
-    deg_ck = deg.localCheckpoint(eager=True)
-    deg = deg_ck.toDF(*deg_ck.columns)
-
-    # state0 is a free projection of the already-checkpointed deg — a
-    # third eager checkpoint here would re-materialize |V| rows for
-    # nothing (r14 interleaved A/B: -0.2 s at sf0.1, one fewer |V|-row
-    # job at any scale).  Round 0's join recomputes only the literal pr
-    # column on top of deg_ck; lineage stays bounded because deg_ck is
-    # itself a checkpoint.
-    state = deg.withColumn("pr", F.lit(MICRO).cast("long"))
-    st_ck = None
-
-    for i in range(iterations):
-        contribs = (
-            e.join(state, e.src == state.node)
-            .select("dst", F.expr("pr DIV outdeg").alias("c"))
-            .groupBy("dst")
-            .agg(F.sum("c").alias("mass"))
+    if iterations == 0:
+        return (
+            e.select(F.col("src").alias("node"))
+            .distinct()
+            .select("node", F.lit(MICRO).cast("long").alias("pr"))
         )
-        nxt = (
-            deg.join(contribs, deg.node == contribs.dst, "left")
-            .select("node", "outdeg", _damped_pr("mass"))
-        )
-        nxt_ck = nxt.localCheckpoint(eager=True)
-        if st_ck is not None:
-            _free_checkpoint(st_ck)
-        st_ck = nxt_ck
-        state = st_ck.toDF(*st_ck.columns)
-
-    if stats is not None:
-        stats["iterations"] = iterations
-    _free_checkpoint(e)
-    if iterations > 0:
-        # with zero iterations the returned state is still a projection
-        # OVER deg_ck — freeing a localCheckpoint's blocks makes it
-        # unrecomputable, so deg_ck must stay live in that (test-only)
-        # case.
-        _free_checkpoint(deg_ck)
-    return state.select("node", "pr")
-
-
-def _pagerank_full_in_degree(
-    e: DataFrame, iterations: int, stats: dict | None
-) -> DataFrame:
-    """The in-degree>=1 fast path (see pagerank docstring; r15
-    interleaved A/B: 2.98 -> 2.32 s best-of-5 at sf0.1, and at any
-    scale one fewer |V|-row join + broadcast per round and one fewer
-    |V|-row checkpoint job up front).  `e` is the cast (and, per the
-    caller's flags, deduplicated) edge list."""
-    e_deg = e.withColumn(
+    e = e.withColumn(
         "outdeg", F.count("*").over(Window.partitionBy("src"))
     ).localCheckpoint(eager=True)
 
-    # Size-gated broadcast decision, made ONCE: |state| is |V| rows in
-    # every round, so one count over the round-0 checkpoint (cheap — it
-    # is materialized) decides all remaining rounds.  A checkpointed
-    # frame reports no usable size stats, so without the hint the
-    # planner lays out SortMergeJoin and BOTH sides pay an exchange —
-    # including the |E|-row edge list, EVERY round — before AQE demotes
-    # to broadcast at runtime (measured: the demotion happens, but the
-    # edge exchange has already run).  A blind hint would be the
-    # opposite mistake (|V| grows with the corpus past any broadcast
-    # cap), so the hint is applied exactly when ~64 B/row of state fits
-    # the session's own autoBroadcastJoinThreshold.
-    spark = e_deg.sparkSession
+    # Size-gated broadcast decision, made ONCE: |state| is at most |V|
+    # rows in every round, so the round-0 state's row count decides all
+    # remaining rounds.  A checkpointed frame reports no usable size
+    # stats, so without the hint the planner lays out SortMergeJoin and
+    # BOTH sides pay an exchange — including the |E|-row edge list,
+    # EVERY round — before AQE demotes to broadcast at runtime
+    # (measured: the demotion happens, but the edge exchange has already
+    # run).  A blind hint would be the opposite mistake (|V| grows with
+    # the corpus past any broadcast cap), so the hint is applied exactly
+    # when ~64 B/row of state fits the session's own
+    # autoBroadcastJoinThreshold.
     try:
-        _raw = spark.conf.get("spark.sql.autoBroadcastJoinThreshold")
-        bcast_threshold = int(_raw.lower().removesuffix("b"))  # "10485760b"
+        bcast_threshold = parse_bytes(
+            e.sparkSession.conf.get("spark.sql.autoBroadcastJoinThreshold")
+        )
     except Exception:
-        bcast_threshold = 0  # unparseable ("10MB") / unset -> no hint
-    state_fits_broadcast = False
+        bcast_threshold = 0  # unset / unparseable -> no hint
 
-    st_ck = None
-    state: DataFrame | None = None
     for i in range(iterations):
-        if state is None:
+        if i == 0:
             # round 0: state is the constant pr=MICRO — no join needed
-            contribs = e_deg.select(
-                "dst", F.expr(f"{MICRO} DIV outdeg").alias("c")
-            )
+            rows, c = e, F.expr(f"{MICRO} DIV outdeg")
         else:
             s = F.broadcast(state) if state_fits_broadcast else state
-            contribs = e_deg.join(s, e_deg.src == s.node).select(
-                "dst", F.expr("pr DIV outdeg").alias("c")
+            rows = e.join(s, e.src == s.node, "left")
+            c = F.expr(f"coalesce(pr, {TELEPORT}) DIV outdeg")
+        if i < iterations - 1:
+            contribs = rows.select("dst", c.alias("c"))
+        else:
+            # each edge also hands its src a zero, in the same pass (a
+            # union with a second scan of the edges measured ~60 ms
+            # slower per call at sf0.1)
+            contribs = rows.select(
+                F.posexplode(F.array("dst", "src")).alias("k", "dst"),
+                c.alias("c"),
+            ).select(
+                "dst", F.when(F.col("k") == 0, F.col("c")).otherwise(0).alias("c")
             )
         nxt = (
             contribs.groupBy("dst")
             .agg(F.sum("c").alias("mass"))
             .select(F.col("dst").alias("node"), _damped_pr("mass"))
         )
-        nxt_ck = nxt.localCheckpoint(eager=True)
-        if st_ck is None and iterations > 1:
-            # one cheap count over the materialized round-0 state fixes
-            # the broadcast decision for every remaining round
+        # Counting the checkpointed RDD materializes it — the very job
+        # an eager checkpoint runs — and hands back |state|, which a
+        # separate Dataset.count would pay a second, two-stage job for.
+        nxt_ck = nxt.localCheckpoint(eager=False)
+        n_state = nxt_ck._jdf.queryExecution().analyzed().rdd().count()
+        if i == 0:
             state_fits_broadcast = (
-                bcast_threshold > 0
-                and nxt_ck.count() * 64 < bcast_threshold
+                bcast_threshold > 0 and n_state * 64 < bcast_threshold
             )
-        if st_ck is not None:
+        else:
             _free_checkpoint(st_ck)
         st_ck = nxt_ck
         state = st_ck.toDF(*st_ck.columns)
 
-    if stats is not None:
-        stats["iterations"] = iterations
-    if iterations == 0:
-        # test-only degenerate case: every node at its initial mass;
-        # the projection stays lazy over e_deg, so keep it live.
-        return (
-            e_deg.select(F.col("src").alias("node"))
-            .distinct()
-            .select("node", F.lit(MICRO).cast("long").alias("pr"))
-        )
-    _free_checkpoint(e_deg)
+    _free_checkpoint(e)
     return state.select("node", "pr")

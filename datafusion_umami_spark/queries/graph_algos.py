@@ -74,15 +74,10 @@ def graph_pagerank_purchases(spark: SparkSession, sf_dir: str) -> DataFrame:
         .distinct()
     )
     bidir = e0.unionAll(e0.select(F.col("dst").alias("src"), F.col("src").alias("dst")))
-    # r14: bidir is duplicate-free BY CONSTRUCTION — e0 is distinct and
-    # the reversed arm cannot collide with it (src ids are even, dst ids
-    # odd, so no edge equals any reversal) — skip the operator's
-    # defensive |E|-shuffle distinct (guide §2.4 accidental shuffle).
-    # r15: bidirectionality also guarantees in-degree >= 1 for every
-    # node, so the full_in_degree fast path applies (one join + one
-    # aggregate per round; bit-identity pinned in tests/test_fuzz.py,
-    # interleaved A/B 2.98 -> 2.32 s best-of-5).
-    pr = pagerank(bidir, iterations=_ITER, dedup_edges=False, full_in_degree=True)
+    # bidir is duplicate-free BY CONSTRUCTION, as pagerank() requires —
+    # e0 is distinct and the reversed arm cannot collide with it (src
+    # ids are even, dst ids odd, so no edge equals any reversal).
+    pr = pagerank(bidir, iterations=_ITER)
     return (
         pr.select(F.col("node").cast("long"), F.col("pr").cast("long"))
         .orderBy(F.desc("pr"), "node")

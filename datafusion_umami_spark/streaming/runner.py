@@ -14,8 +14,11 @@ from __future__ import annotations
 import os
 import shutil
 import tempfile
+import weakref
 
 from pyspark.sql import DataFrame, SparkSession
+
+from datafusion_umami_spark.tables import parse_bytes
 
 
 def _scratch_base() -> str:
@@ -38,12 +41,9 @@ def _scratch_base() -> str:
     env = os.environ.get("SPARK_GRAFT_STREAM_SCRATCH")
     if env:
         return env
-    floor = int(
-        os.environ.get("SPARK_GRAFT_SHM_FREE_FLOOR", str(2 * 1024**3))
-    )
     if os.path.isdir("/dev/shm") and os.access("/dev/shm", os.W_OK):
         try:
-            if shutil.disk_usage("/dev/shm").free >= floor:
+            if shutil.disk_usage("/dev/shm").free >= 2 * 1024**3:
                 return "/dev/shm"
         except OSError:
             pass
@@ -87,36 +87,28 @@ def scratch_dir(spark: SparkSession, *parts: str) -> str:
 # partition-count-independent (the hostile-config parity gate already
 # runs every streaming spec at 3 shuffle partitions).
 # `read_events_stream` records its source size per session;
-# `stream_to_memory` applies the override around the drain and restores
-# the conf afterwards (the conf is read at query start and re-read per
-# micro-batch, so the override must span awaitTermination).
-# SPARK_GRAFT_STREAM_STATE_COALESCE=off disables (A/B hook).
-_SOURCE_BYTES: dict[int, int] = {}  # id(SparkSession) -> bytes of last stream read
+# `stream_to_memory` consumes (pops) it, applies the override around the
+# drain and restores the conf afterwards (the conf is read at query
+# start and re-read per micro-batch, so the override must span
+# awaitTermination).  Popping means a later drain without a fresh
+# `read_events_stream` never inherits a stale size, and the weak keys
+# mean a collected session's entry (or a recycled id()) cannot either.
+_SOURCE_BYTES: weakref.WeakKeyDictionary[SparkSession, int] = (
+    weakref.WeakKeyDictionary()
+)
 
 
-def _parse_bytes(s: str) -> int:
-    """Parse a Spark byte-size conf string ('64MB', '256m', '1048576')."""
-    import re
-
-    m = re.fullmatch(r"\s*(\d+)\s*([kmgt]?)b?\s*", s, re.IGNORECASE)
-    if not m:
-        return 64 * 1024 * 1024
-    mult = {"": 1, "k": 1024, "m": 1024**2, "g": 1024**3, "t": 1024**4}
-    return int(m.group(1)) * mult[m.group(2).lower()]
-
-
-def _coalesced_state_partitions(spark: SparkSession) -> int | None:
-    """The adaptive override for this session's next streaming drain, or
+def _coalesced_state_partitions(
+    spark: SparkSession, size: int | None
+) -> int | None:
+    """The adaptive override for a drain over `size` source bytes, or
     None when it would not shrink anything (unknown source size, small
-    conf, opt-out)."""
-    if os.environ.get("SPARK_GRAFT_STREAM_STATE_COALESCE", "on") == "off":
-        return None
-    size = _SOURCE_BYTES.get(id(spark))
+    conf)."""
     if not size:
         return None
     try:
         current = int(spark.conf.get("spark.sql.shuffle.partitions"))
-        advisory = _parse_bytes(
+        advisory = parse_bytes(
             spark.conf.get("spark.sql.adaptive.advisoryPartitionSizeInBytes")
         )
     except Exception:
@@ -156,11 +148,11 @@ def read_events_stream(spark: SparkSession, sf_dir: str) -> DataFrame:
         .load(sf_dir)
     )
     try:  # source size for the adaptive state-partition coalesce
-        _SOURCE_BYTES[id(spark)] = os.stat(
+        _SOURCE_BYTES[spark] = os.stat(
             os.path.join(sf_dir, "events.parquet")
         ).st_size
     except OSError:
-        _SOURCE_BYTES.pop(id(spark), None)
+        _SOURCE_BYTES.pop(spark, None)
     return normalize_events_ts(sdf, "timestamp")
 
 
@@ -171,7 +163,7 @@ def stream_to_memory(
     in-memory sink table and return it as a batch DataFrame."""
     spark = sdf.sparkSession
     checkpoint = scratch_dir(spark, "stream", name)
-    n = _coalesced_state_partitions(spark)
+    n = _coalesced_state_partitions(spark, _SOURCE_BYTES.pop(spark, None))
     saved: str | None = None
     if n is not None:
         saved = spark.conf.get("spark.sql.shuffle.partitions")

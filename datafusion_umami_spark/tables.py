@@ -11,6 +11,8 @@ catalog table); the loader only needs the root path to change.
 
 from __future__ import annotations
 
+import re
+
 from pyspark.sql import DataFrame, SparkSession
 
 TABLE_NAMES = (
@@ -42,19 +44,22 @@ SPREAD_TABLES = frozenset(
 # for nothing).  At sf0.001 no fixture passes the floor, so the local
 # test suite's plan gates see unchanged plans; at sf0.01+ the fact
 # tables do, so the oracle sweep exercises the spread path.
-SPREAD_MIN_BYTES = int(
-    __import__("os").environ.get("SPARK_GRAFT_SPREAD_MIN_BYTES", 512 * 1024)
-)
+SPREAD_MIN_BYTES = 512 * 1024
 
 
-def _size_suffix_bytes(v: str) -> int:
-    """Parse a Spark size conf value ('134217728', '128m', '1g', '48kb')."""
-    s = v.strip().lower().removesuffix("b")
-    mult = 1
-    if s and s[-1] in "kmgtp":
-        mult = 1024 ** ("kmgtp".index(s[-1]) + 1)
-        s = s[:-1]
-    return int(float(s)) * mult
+def parse_bytes(v: str) -> int:
+    """Parse a Spark byte-size conf value the way Spark's
+    `byteFromString` does: '134217728', '10485760b', '128m', '64MB',
+    '1g', '48kb', '-1' (a leading minus is kept: -1 is how
+    autoBroadcastJoinThreshold says "off").  Unit-less means bytes;
+    suffixes are binary multiples, case-insensitive.  Raises
+    ValueError on anything Spark itself would reject."""
+    m = re.fullmatch(r"(-?)(\d+)([kmgtp]?)b?", v.strip().lower())
+    if m is None:
+        raise ValueError(f"not a byte size: {v!r}")
+    sign, digits, unit = m.groups()
+    n = int(digits) * 1024 ** " kmgtp".index(unit or " ")
+    return -n if sign else n
 
 
 def _maybe_spread(df: DataFrame, spark: SparkSession, path: str) -> DataFrame:
@@ -89,8 +94,6 @@ def _maybe_spread(df: DataFrame, spark: SparkSession, path: str) -> DataFrame:
     import math
     import os
 
-    if os.environ.get("SPARK_GRAFT_SCAN_SPREAD", "1") == "0":
-        return df
     try:
         st = os.stat(path)
     except OSError:
@@ -98,7 +101,7 @@ def _maybe_spread(df: DataFrame, spark: SparkSession, path: str) -> DataFrame:
     if st.st_size < SPREAD_MIN_BYTES:
         return df
     try:
-        max_split = _size_suffix_bytes(
+        max_split = parse_bytes(
             str(spark.conf.get("spark.sql.files.maxPartitionBytes"))
         )
     except Exception:
@@ -240,11 +243,7 @@ def table(
     df = reader.parquet(path)
     if name == "events":
         df = normalize_events_ts(df, "timestamp_ntz")
-    # SPARK_GRAFT_SCAN_SPREAD: "0" disables even opted-in spreads
-    # (checked in _maybe_spread); "force" opts every fact scan in
-    # (measurement / cluster-tuning override).
-    force = __import__("os").environ.get("SPARK_GRAFT_SCAN_SPREAD") == "force"
-    if (spread or force) and name in SPREAD_TABLES:
+    if spread and name in SPREAD_TABLES:
         df = _maybe_spread(df, spark, path)
     return df
 
@@ -267,7 +266,7 @@ def load_tables(spark: SparkSession, sf_dir: str) -> dict[str, DataFrame]:
 # EXTERNAL createOrReplaceTempView over one of our 10 names (test
 # suites do this with micro-data): tests/conftest.py invalidates the
 # memo around every test, and invalidate_view_memo() is the public
-# escape hatch.  SPARK_GRAFT_VIEW_MEMO=0 disables entirely.
+# escape hatch.
 _VIEW_MEMO: dict[int, tuple] = {}
 
 
@@ -283,10 +282,9 @@ def _view_memo_key(
     """None ⇒ non-memoizable (always re-register).  The key must witness
     every input that table()/_maybe_spread bake into the registered
     view's LOGICAL PLAN at install time (r14 ADVICE):
-    - maxPartitionBytes and the SPARK_GRAFT_SCAN_SPREAD env gate the
-      spread repartition — an in-session change must miss the memo, the
-      same PLAN_SHAPE_CONFS discipline as the shared-checkpoint cache
-      (operators/materialize.py);
+    - maxPartitionBytes gates the spread repartition — an in-session
+      change must miss the memo, the same PLAN_SHAPE_CONFS discipline
+      as the shared-checkpoint cache (operators/materialize.py);
     - the schema confs decide what the footer-schema cache inferred;
     - a non-regular file (the 100 TB directory-table layout) has a stat
       that does not witness its leaves — bypass, mirroring
@@ -313,7 +311,6 @@ def _view_memo_key(
         frozenset(n for n in spread),
         tuple(stats),
         max_split,
-        os.environ.get("SPARK_GRAFT_SCAN_SPREAD"),
         _schema_conf_key(spark),
     )
 
@@ -329,11 +326,8 @@ def register_views(
     scale-adaptive scan spread for the CALLING query (the choice never
     leaks into the next query: a different spread set misses the memo
     key and re-registers)."""
-    import os
-
-    memo_on = os.environ.get("SPARK_GRAFT_VIEW_MEMO", "1") != "0"
-    key = _view_memo_key(spark, sf_dir, spread) if memo_on else None
-    memo_on = memo_on and key is not None  # None ⇒ non-memoizable layout
+    key = _view_memo_key(spark, sf_dir, spread)
+    memo_on = key is not None  # None ⇒ non-memoizable layout
     # keyed on id() of the live session object; the stored weakref must
     # still point at the SAME object (a recycled id or a new session
     # misses, and a miss only ever re-registers — the safe direction).

@@ -1204,15 +1204,24 @@ def test_connected_components_matches_union_find(edges, spark):
         min_size=1,
         max_size=20,
     ),
-    iters=st.integers(1, 3),
+    feed=st.sets(
+        st.tuples(st.integers(10, 12), st.integers(0, 19)),
+        min_size=1,
+        max_size=4,
+    ),
+    iters=st.integers(0, 3),
 )
-def test_pagerank_matches_integer_reference(und, iters, spark):
+def test_pagerank_matches_integer_reference(und, feed, iters, spark):
     """Integer-exact PageRank == a pure-Python reference running the
     same micro-unit truncating arithmetic.  The operator's determinism
     contract (operators/pagerank.py docstring) promises bit-identical
     results regardless of partitioning or merge order, so the check is
-    set equality on exact (node, pr) pairs, no tolerance.  Bidirectional
-    edges per the operator's every-node-is-a-src contract."""
+    set equality on exact (node, pr) pairs, no tolerance.  Two input
+    classes, both honouring the every-node-is-a-src contract:
+      - bidirectional edges (every node also has in-degree >= 1);
+      - directed edges where nodes 10..12 only feed the graph (in-degree
+        0, rank TELEPORT after round 0) and every sink gets one
+        out-edge, so some nodes never receive mass."""
     from datafusion_umami_spark.operators.pagerank import (
         DAMP_NUM,
         MICRO,
@@ -1220,40 +1229,31 @@ def test_pagerank_matches_integer_reference(und, iters, spark):
         pagerank,
     )
 
+    def reference(edges):
+        outdeg: dict[int, int] = {}
+        for s, _d in edges:
+            outdeg[s] = outdeg.get(s, 0) + 1
+        pr = {n: MICRO for n in outdeg}
+        for _ in range(iters):
+            mass = {n: 0 for n in outdeg}
+            for s, d in edges:
+                mass[d] += pr[s] // outdeg[s]
+            pr = {n: TELEPORT + (DAMP_NUM * mass[n]) // MICRO for n in outdeg}
+        return set(pr.items())
+
     bidir = sorted({(a, b) for a, b in und} | {(b, a) for a, b in und})
-    df = spark.createDataFrame(bidir, "src long, dst long")
-    got = {(r.node, r.pr) for r in pagerank(df, iterations=iters).collect()}
-
-    outdeg: dict[int, int] = {}
-    for s, _d in bidir:
-        outdeg[s] = outdeg.get(s, 0) + 1
-    pr = {n: MICRO for n in outdeg}
-    for _ in range(iters):
-        mass = {n: 0 for n in outdeg}
-        for s, d in bidir:
-            mass[d] += pr[s] // outdeg[s]
-        pr = {n: TELEPORT + (DAMP_NUM * mass[n]) // MICRO for n in outdeg}
-    assert got == set(pr.items())
-
-    # r14 dedup_edges=False contract: on an ALREADY-DISTINCT edge list
-    # the shuffle-skipping path must be bit-identical to the default
-    skip = {
-        (r.node, r.pr)
-        for r in pagerank(df, iterations=iters, dedup_edges=False).collect()
-    }
-    assert skip == got
-
-    # r15 full_in_degree contract: a BIDIRECTIONAL edge list gives every
-    # node in-degree >= 1, so the restructured path (outdeg on the edge
-    # list, constant round 0, no per-round deg join) must be
-    # bit-identical to the default on exactly this input class.
-    fast = {
-        (r.node, r.pr)
-        for r in pagerank(
-            df, iterations=iters, dedup_edges=False, full_in_degree=True
-        ).collect()
-    }
-    assert fast == got
+    nodes = sorted({a for a, _b in bidir})
+    srcs = {a for a, _b in und}
+    directed = sorted(
+        set(und)
+        | {(n, nodes[0] if n != nodes[0] else nodes[1])
+           for n in nodes if n not in srcs}
+        | {(s, nodes[d % len(nodes)]) for s, d in feed}
+    )
+    for edges in (bidir, directed):
+        df = spark.createDataFrame(edges, "src long, dst long")
+        got = {(r.node, r.pr) for r in pagerank(df, iterations=iters).collect()}
+        assert got == reference(edges), edges
 
 
 @settings(max_examples=10, deadline=None)

@@ -94,7 +94,7 @@ def test_register_views_spread_is_per_call(spark, sf_dir, monkeypatch):
 
 
 def test_size_suffix_parser():
-    f = tables._size_suffix_bytes
+    f = tables.parse_bytes
     assert f("134217728") == 128 * 1024 * 1024
     assert f("128m") == 128 * 1024 * 1024
     assert f("128MB") == 128 * 1024 * 1024

@@ -338,10 +338,10 @@ def test_balanced_sample_is_balanced_and_stable(spark, sf_dir):
 def test_pagerank_frees_round_checkpoints(spark):
     """Like connected components, each PageRank round's localCheckpoint
     must be unpersisted once superseded — bounded block-manager usage on
-    a long-lived driver."""
+    a long-lived driver.  Zero iterations take no checkpoint at all."""
     from pyspark.sql import functions as F
 
-    from datafusion_umami_spark.operators.pagerank import pagerank
+    from datafusion_umami_spark.operators.pagerank import MICRO, pagerank
 
     def stored() -> int:
         return len(spark.sparkContext._jsc.sc().getRDDStorageInfo())
@@ -352,10 +352,12 @@ def test_pagerank_frees_round_checkpoints(spark):
     )
     bidir = ring.unionAll(ring.select(F.col("dst").alias("src"),
                                       F.col("src").alias("dst")))
-    stats: dict = {}
-    pr = pagerank(bidir, iterations=6, stats=stats)
-    rows = pr.collect()
-    assert stats["iterations"] == 6
+    rows = pagerank(bidir, iterations=0).collect()
+    assert sorted(rows) == [(i, MICRO) for i in range(60)]
+    assert stored() == before, (
+        f"iterations=0 left a checkpoint: {before} before, {stored()} after"
+    )
+    rows = pagerank(bidir, iterations=6).collect()
     assert len(rows) == 60
     # symmetric ring → uniform stationary mass: every node keeps ~1.0
     assert all(abs(r.pr - 1_000_000) < 5 for r in rows)

@@ -523,9 +523,10 @@ def test_legacy_backlog_is_exhausted():
                   # (b) pipeline_c4_style_filter: split-materialized
                   # (2 documents scans -> 1, regex chain runs once);
                   "pipeline_c4_style_filter",
-                  # (c) graph_pagerank_purchases: dedup_edges=False
-                  # fast path (bidir is distinct by construction) +
-                  # the dropped initial-state checkpoint;
+                  # (c) graph_pagerank_purchases: the skipped
+                  # defensive distinct (bidir is distinct by
+                  # construction) + the dropped initial-state
+                  # checkpoint;
                   "graph_pagerank_purchases",
                   # (d) window_first_last_nth/window_running_sum_rows:
                   # the r14 LATENT-nondeterminism fix (total-order

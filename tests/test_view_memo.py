@@ -96,15 +96,6 @@ def test_memo_misses_on_max_partition_bytes_change(spark, monkeypatch):
         spark.conf.set("spark.sql.files.maxPartitionBytes", old)
 
 
-def test_memo_misses_on_scan_spread_env_change(spark, monkeypatch):
-    calls = _install_counter(monkeypatch)
-    register_views(spark, SF_DIR, spread=("lineitem",))
-    n1 = calls["n"]
-    monkeypatch.setenv("SPARK_GRAFT_SCAN_SPREAD", "0")
-    register_views(spark, SF_DIR, spread=("lineitem",))
-    assert calls["n"] == 2 * n1  # env change: full re-install
-
-
 def test_memo_bypassed_for_directory_tables(spark, monkeypatch, tmp_path):
     """r14 ADVICE (low): a directory table's stat does not witness its
     leaves — the memo must bypass (always re-register), mirroring
@@ -125,12 +116,3 @@ def test_memo_bypassed_for_directory_tables(spark, monkeypatch, tmp_path):
     n1 = calls["n"]
     register_views(spark, str(d))
     assert calls["n"] == 2 * n1  # never memoized: stat can't witness leaves
-
-
-def test_memo_disabled_by_env(spark, monkeypatch):
-    monkeypatch.setenv("SPARK_GRAFT_VIEW_MEMO", "0")
-    calls = _install_counter(monkeypatch)
-    register_views(spark, SF_DIR)
-    n1 = calls["n"]
-    register_views(spark, SF_DIR)
-    assert calls["n"] == 2 * n1  # no memo: every call re-installs
