@@ -94,9 +94,10 @@ def oracle_sql() -> dict[str, str]:
 
 
 def spec_fingerprints() -> dict[str, str]:
-    """name -> sha256 fingerprint of the spec text AS LOADED in this
-    process (Spark SQL/docstring + oracle SQL + callable source + the
-    shared-semantics salt).
+    """name -> sha256 fingerprint of the spec AS LOADED in this process
+    (Spark SQL/docstring + oracle SQL + shape — `_sql_shape` for SQL
+    specs, the callable source for DataFrame specs — + the
+    shared-semantics salt; fingerprint.spec_fingerprint).
 
     OPTIONAL driver hook (r10 verdict item 4 / r9 ADVICE item 1): if the
     sweep records each swept name's fingerprint as an `"fp"` field in

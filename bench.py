@@ -33,7 +33,7 @@ from datafusion_umami_spark.session import get_spark
 # heavy-tailed (up to 2.5x iteration spread on identical plans — see
 # SCALE.md "bench regression root cause"); best-of-N with N=3 converges
 # to the true plan cost where N=2 still carries ~10% aggregate noise.
-N_ITERS = int(os.environ.get("SPARK_GRAFT_BENCH_ITERS", "3"))
+N_ITERS = 3
 
 
 def _steal_jiffies() -> int | None:
@@ -51,7 +51,7 @@ def _steal_jiffies() -> int | None:
 # contention and affected queries get ONE clean-retry pass (the r6
 # official artifact carried steal 1093 while two independent quiet runs
 # were clean — the driver artifact should not depend on luck).
-STEAL_THRESHOLD = int(os.environ.get("SPARK_GRAFT_STEAL_THRESHOLD", "200"))
+STEAL_THRESHOLD = 200
 
 
 def _timed_iters(spark, spec, sf_dir: str) -> tuple[list[float], int]:
@@ -82,7 +82,7 @@ def _timed_iters(spark, spec, sf_dir: str) -> tuple[list[float], int]:
 # steal 386 > threshold.  Up to this many ADDITIONAL passes run,
 # per-query, until the pass supplying a query's reported minimum saw
 # zero steal.
-MAX_RETRY_PASSES = int(os.environ.get("SPARK_GRAFT_STEAL_RETRY_PASSES", "3"))
+MAX_RETRY_PASSES = 3
 
 # Variance-triggered clean retry (r14 verdict item 4): host contention
 # can inflate a query's whole timed window while the steal counter stays
@@ -92,8 +92,8 @@ MAX_RETRY_PASSES = int(os.environ.get("SPARK_GRAFT_STEAL_RETRY_PASSES", "3"))
 # the kept pass is the LEAST-SPREAD one (ties keep the earliest), never
 # a min over passes — same wholesale-pass replacement discipline as the
 # steal retry, so reported minima stay round-over-round comparable.
-VARIANCE_FACTOR = float(os.environ.get("SPARK_GRAFT_VARIANCE_FACTOR", "1.8"))
-MAX_VARIANCE_RETRIES = int(os.environ.get("SPARK_GRAFT_VARIANCE_RETRIES", "2"))
+VARIANCE_FACTOR = 1.8
+MAX_VARIANCE_RETRIES = 2
 
 
 def _spread_ratio(runs: list[float]) -> float:
@@ -104,10 +104,10 @@ def _spread_ratio(runs: list[float]) -> float:
 def run_suite(
     names,
     run_query,
-    steal_threshold=None,
-    max_retry_passes=None,
-    variance_factor=None,
-    max_variance_retries=None,
+    steal_threshold=STEAL_THRESHOLD,
+    max_retry_passes=MAX_RETRY_PASSES,
+    variance_factor=VARIANCE_FACTOR,
+    max_variance_retries=MAX_VARIANCE_RETRIES,
 ):
     """Timing + steal self-defense over `names`, runner-injected for
     testability (bench main wires `run_query` to warmup + _timed_iters).
@@ -133,15 +133,6 @@ def run_suite(
     is flagged `contaminated` (r7 ADVICE item 2) instead of merely
     looking "handled".
     """
-    if steal_threshold is None:
-        steal_threshold = STEAL_THRESHOLD
-    if max_retry_passes is None:
-        max_retry_passes = MAX_RETRY_PASSES
-    if variance_factor is None:
-        variance_factor = VARIANCE_FACTOR
-    if max_variance_retries is None:
-        max_variance_retries = MAX_VARIANCE_RETRIES
-
     times: dict[str, float] = {}
     iters: dict[str, list[float]] = {}
     steal_by_query: dict[str, int] = {}  # steal of the pass supplying times[name]

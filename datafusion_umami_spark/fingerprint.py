@@ -1,17 +1,17 @@
-"""Spec-text fingerprints for the sweep ledger (r8 verdict item 4).
+"""Spec fingerprints for the sweep ledger (r8 verdict item 4).
 
-"Proven" must mean proven-as-written: a driver green row certifies the
-spec TEXT the driver ran, not the name.  Each QuerySpec is fingerprinted
-over its SPEC-LOCAL text — the Spark SQL / docstring, the DuckDB oracle
-text, the Python source of the callable (captures DataFrame-code edits
-that leave the docstring alone) — plus a shared salt over ALL shared
-semantic helpers every oracle relies on (`registry.dec/dsum/davg/
-money/ntz` — widened from dec/dsum in round 10, r9 ADVICE item 3, with
-an in-place verified ledger migration; byte-stable since round 1, so
-salting them is free until the day someone edits them — at which point
-demoting every green is exactly right).  BOUNDARY (explicit, not an
-oversight): edits to the
-broader shared infrastructure (tables.py loading/normalization,
+"Proven" must mean proven-as-written: a driver green row certifies what
+the spec the driver ran MEANS, not its name.  Each QuerySpec is
+fingerprinted over its Spark SQL / docstring, its DuckDB oracle text and
+its shape (`spec_fingerprint`: `fn._sql_shape` for SQL specs, the
+callable's source for DataFrame specs — never a registrar closure), plus
+a shared salt over ALL shared semantic helpers every oracle relies on
+(`registry.dec/dsum/davg/money/ntz` — widened from dec/dsum in round 10,
+r9 ADVICE item 3, with an in-place verified ledger migration; byte-stable
+since round 1, so salting them is free until the day someone edits them
+— at which point demoting every green is exactly right).  BOUNDARY
+(explicit, not an oversight): edits to the broader shared
+infrastructure (the registrars, tables.py loading/normalization,
 operators/materialize.py, streaming/runner.py) are NOT fingerprinted —
 they changed in most rounds, so salting them would mass-demote the
 proven ledger; their correctness is instead re-proven every round by
@@ -34,7 +34,10 @@ Maintenance: `tools/update_sweep_fingerprints.py`, run at ROUND START
 (before any spec edits) so newly-green rows are blessed against the text
 the driver actually swept.  The round-1..8 entries were bootstrapped from
 each round's snapshot commit (the verdict commit's parent), i.e. from the
-exact text each green row ran against.
+exact text each green row ran against.  The switch from hashing the
+registrar closure to `_sql_shape` migrated the ledger like round 10 did:
+an `fp` was rewritten only where it matched the old algorithm's
+fingerprint of the current text, so stale entries stayed stale.
 """
 
 from __future__ import annotations
@@ -92,18 +95,21 @@ def _shared_salt() -> str:
 
 
 def spec_fingerprint(spec) -> str:  # type: ignore[no-untyped-def]
-    """sha256 over (fn docstring, oracle SQL, fn source, shared salt).
+    """sha256 over (fn docstring, oracle SQL, shape, shared salt).
 
-    The docstring carries the full Spark SQL for `register_sql` /
-    `register_split_sql` specs; the source carries DataFrame-code bodies
-    for decorator-registered specs (for SQL specs it is the shared
-    registrar closure — constant, harmless).  Comment-only edits do
-    invalidate a fingerprint: conservative by design.
+    The docstring carries the full Spark SQL of `register_sql` /
+    `register_split_sql` specs, whose shape is `fn._sql_shape`.  A
+    `@register` DataFrame spec's shape is its callable's source, so even
+    a comment-only edit to its body demotes it: conservative by design.
     """
-    try:
-        src = inspect.getsource(spec.fn)
-    except (OSError, TypeError):
-        src = ""
+    shape = getattr(spec.fn, "_sql_shape", None)
+    if shape is not None:
+        src = repr(shape)
+    else:
+        try:
+            src = inspect.getsource(spec.fn)
+        except (OSError, TypeError):
+            src = ""
     blob = "\x00".join(
         (spec.fn.__doc__ or "", spec.oracle or "", src, _shared_salt())
     )

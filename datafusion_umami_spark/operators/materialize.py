@@ -170,23 +170,6 @@ def materialize_view(key: str, df: DataFrame, view: str) -> DataFrame:
     return out
 
 
-def _plain_split_fn(name, stages, final_sql):
-    """Runner for split specs WITHOUT a spread opt-in.  BYTE-IDENTITY
-    NOTE (r14): the nested `fn` reproduces the pre-r14 closure exactly
-    (text + nesting depth) — `inspect.getsource(spec.fn)` is salted
-    into the ledger fingerprint, so keeping this byte-stable keeps
-    unedited split specs proven-as-written (see registry._plain_sql_fn)."""
-    from datafusion_umami_spark.tables import register_views
-
-    def fn(spark, sf_dir):  # type: ignore[no-untyped-def]
-        register_views(spark, sf_dir)
-        for stage_sql, view in stages:
-            materialize_view(f"{name}:{view}", spark.sql(stage_sql), view)
-        return spark.sql(final_sql)
-
-    return fn
-
-
 def register_split_sql(
     name: str,
     stages: list[tuple[str, str]],
@@ -195,7 +178,6 @@ def register_split_sql(
     tags: tuple[str, ...] = (),
     bench: bool = False,
     discrimination: str | None = None,
-    spread_tables: tuple[str, ...] = (),
 ) -> None:
     """Register a query whose Spark side materializes each (sql, view)
     stage once, then runs `final_sql` over the views — for the common
@@ -206,22 +188,17 @@ def register_split_sql(
     from datafusion_umami_spark.registry import register
     from datafusion_umami_spark.tables import register_views
 
-    if spread_tables:
-        # fingerprint-distinct by design: the spread path demotes the
-        # spec until a fresh driver row proves it (registry.register_sql)
-        def fn(spark, sf_dir):  # type: ignore[no-untyped-def]
-            register_views(spark, sf_dir, spread=spread_tables)
-            for stage_sql, view in stages:
-                materialize_view(f"{name}:{view}", spark.sql(stage_sql), view)
-            return spark.sql(final_sql)
-
-    else:
-        fn = _plain_split_fn(name, stages, final_sql)
+    def fn(spark, sf_dir):  # type: ignore[no-untyped-def]
+        register_views(spark, sf_dir)
+        for stage_sql, view in stages:
+            materialize_view(f"{name}:{view}", spark.sql(stage_sql), view)
+        return spark.sql(final_sql)
 
     fn.__name__ = name
     fn.__doc__ = "\n-- stage: materialized once --\n".join(
         [s for s, _ in stages] + [final_sql]
     )
+    fn._sql_shape = ("split", tuple(view for _, view in stages))
     # exposed for the split-vs-inlined equivalence gate
     # (tests/test_fuzz.py): naming each stage CTE by its view name makes
     # `WITH <view> AS (<stage>) <final>` a valid inlined composition.

@@ -2,39 +2,28 @@
 every query into `datafusion_umami_spark.registry.REGISTRY`.
 
 REGISTRATION ORDER IS LOAD-BEARING: the driver's correctness sweep walks
-the registry in insertion order under a ~50-query/round budget.  Rounds 1
-and 2 proved 100 distinct queries (r1 ∩ r2 = ∅); to stop the sweep from
-re-proving the same queries, `_reorder_for_sweep()` below rebuilds the
-REGISTRY dict after all modules import:
+the registry in insertion order under a ~50-query/round budget, so
+`_reorder_for_sweep()` below rebuilds the REGISTRY dict after all
+modules import, in three ranks:
 
-  1. `SWEEP_PRIORITY` names first (explicit, highest-value unproven work:
-     the fixed round-1 canonicalizer FAILs, then set ops / relational /
-     scalar-function surfaces that have never had a driver row);
-  2. queries whose latest recorded driver row FAILED (need re-proof);
-  3. queries with no driver row in any `CORRECTNESS_r*.json`, in module
-     import order;
-  4. queries already proven green, last.
+  1. queries whose latest recorded driver row FAILED (need re-proof);
+  2. unproven queries — no driver row in any `CORRECTNESS_r*.json`, or
+     a green row demoted by the fingerprint ledger — in module import
+     order;
+  3. proven greens, by ASCENDING round of their latest driver record
+     (the freshness rotation; module order breaks ties).
 
 "Proven green" means proven-AS-WRITTEN (r8 verdict item 4): a green row
-certifies the spec text the driver ran, so `_driver_history` demotes any
-green name whose CURRENT fingerprint (Spark SQL + oracle + callable
-source, `fingerprint.py`) differs from the committed ledger entry
-recorded at its last green row (`sweep_fingerprints.json`, maintained by
+certifies the spec the driver ran, so `_driver_history` demotes any
+green name whose CURRENT fingerprint (Spark SQL + oracle + shape,
+`fingerprint.py`) differs from the committed ledger entry recorded at
+its last green row (`sweep_fingerprints.json`, maintained by
 `tools/update_sweep_fingerprints.py` at round start).  Edited specs
 re-queue ahead of proven greens until the driver re-proves the new text.
 
 This is self-maintaining: each round's driver artifact is read from the
 repo root, so round N+1 automatically pushes round N's greens to the back
 and pulls any new failures to the front — no manual rotation needed.
-
-PROVE-DOWN HORIZON (re-pinned each round, tests/test_sweep_order.py):
-as of the round-8 artifacts the legacy backlog is 31 queries =
-11 never-swept (job_shapes_t3 x10 + ann_ivf_trained) + 18
-edited-after-proof specs demoted by the r9 fingerprint bootstrap + 2
-ledger-absent fail-safe demotions (r3 greens from a mid-round tree).
-Tranche additions (t4..t8 + clickbench_ext2/closure) stay capped and
-MUST be imported last (below) so they queue strictly behind the legacy
-backlog; they drain once the legacy tail clears.
 """
 
 from __future__ import annotations
@@ -74,9 +63,8 @@ from datafusion_umami_spark.queries import (  # noqa: F401
     windows,
     bucketing,
     asof,
-    # Imported LAST deliberately: round-5/6/7 additions must queue BEHIND
-    # the existing never-swept backlog so the driver sweep spends its
-    # budget on the projected front-50 (prove-down round contract).
+    # later tranches import last, so their never-swept names queue
+    # behind the older unproven backlog
     job_shapes_t3,
     job_shapes_t4,
     tpcds_shapes_t5,
@@ -88,256 +76,7 @@ from datafusion_umami_spark.queries import (  # noqa: F401
     tpcds_shapes_t7,
     job_shapes_t7,
     tpcds_shapes_t8,
-    # round-10 (r9 verdict item 7): pg-compat edge tranche — queued
-    # behind the entire never-swept addition tail.
     pg_edges,
-)
-
-# Explicit front of the sweep queue (only names not yet proven green are
-# pulled forward; proven ones are skipped by the classifier below).
-SWEEP_PRIORITY: tuple[str, ...] = (
-    # THE one red driver row on record (r1 canonicalizer crash; query since
-    # rewritten to scalar columns, and in round 6 to a tolerance-banded
-    # full oracle — exact values + in-band flags, aggregates.py) — must be
-    # first so a ~50-row budget can't miss it
-    "agg_approx_percentile",
-    # remaining §2.11 streaming family (first two went green in r3) —
-    # ahead of text/multimodal per round-3 verdict so the family closes
-    "stream_tumbling_counts",
-    "stream_sliding_window",
-    "stream_static_join",
-    "session_window_agg",
-    "stream_multires_cascade",
-    "stream_foreach_batch_upsert",
-    # round-1 driver FAILs (canonicalizer crash on list output), fixed
-    # locally by stringifying — need a green driver row to close them out
-    "agg_array_agg_sorted",
-    "arr_literal_setops",
-    "map_struct_ops",
-    # never-swept aggregate surface
-    "agg_weighted_percentile",
-    "agg_filter_clause",
-    "agg_group_by_all",
-    # connected-components rewritten to min-label propagation this round
-    "dedup_connected_components",
-    # first-ever streaming driver evidence (§2.11)
-    "stream_stateful_user_sessions",
-    "stream_stream_interval_join",
-    # nested/map surface
-    "unnest_struct_inline",
-    "map_entries_values",
-    "map_higher_order",
-    "arr_append_prepend_insert",
-    # remaining subquery shapes
-    "subq_in_correlated_filter",
-    "subq_lateral_topn",
-    "subq_exists_correlated_agg",
-    # new TPC-DS-shaped corpus (≥1 driver row this round)
-    "tpcds_rollup_rank",
-    "tpcds_share_of_total",
-    # set operations (§2.7 — zero driver rows after two rounds)
-    "union_all",
-    "union_distinct",
-    "union_by_name",
-    "intersect_distinct",
-    "intersect_all",
-    "except_distinct",
-    "except_all",
-    # core relational operators
-    "proj_expressions",
-    "filter_predicates",
-    "filter_like_ilike",
-    "proj_lateral_column_alias",
-    "sort_limit_topk",
-    "limit_offset",
-    "sort_nulls_ordering",
-    "sort_multicol_large",
-    "distinct_pairs",
-    "distinct_on_first_line",
-    "values_literal",
-    "placeholder_one_row",
-    "empty_relation",
-    "range_series",
-    "date_series",
-    # scalar function library (§2.8 — zero driver rows after two rounds)
-    "fn_string_basic",
-    "fn_string_predicates",
-    "fn_unicode_pad_extract",
-    "fn_string_set_index",
-    "fn_like_any_all",
-    "fn_regex",
-    "fn_math_exact",
-    "fn_math_transcendental",
-    "fn_math_gcd_lcm",
-    "fn_conditional",
-    "fn_datetime_parts",
-    "fn_datetime_arith",
-    "fn_datetime_make_parse",
-    "fn_date_bin",
-    "fn_crypto_encoding",
-    "fn_uuid_shape",
-    # JSON surface
-    "json_extract_agg",
-    "json_from_json_struct",
-    "json_to_json_roundtrip",
-    "json_tuple_arrays",
-    "json_variant_ops",
-    # ---- round-4/5 tier (auto-advances as earlier names go green) ----
-    # type-system edges
-    "types_decimal_arith",
-    "types_interval_arith",
-    "types_try_cast",
-    "types_time_of_day_shim",
-    "types_unsigned_widening",
-    "types_timestamp_precision",
-    "types_try_arithmetic",
-    # sources / sinks
-    "csv_scan_roundtrip",
-    "csv_scan_inferred",
-    "json_scan_roundtrip",
-    "arrow_ipc_scan",
-    "avro_scan_roundtrip",
-    "parquet_sink_roundtrip",
-    "partitioned_write_pruned_scan",
-    "insert_into_table",
-    "ctas_temp_view",
-    "dynamic_partition_overwrite",
-    "csv_malformed_modes",
-    "csv_custom_delim_quote",
-    "parquet_codec_roundtrip",
-    # UDF surface (all Arrow-based)
-    "udf_pandas_scalar",
-    "udf_pandas_grouped_agg",
-    "udf_pandas_window_agg",
-    "udf_sql_registered",
-    "udf_grouped_map_topn",
-    "udf_map_in_arrow",
-    "udf_cogroup_merge",
-    "udf_scalar_iter_amortized",
-    # recursive CTEs
-    "recursive_fibonacci",
-    "recursive_hierarchy_depth",
-    "recursive_cyclic_reachability",
-    # LLM-pipeline: similarity search
-    "ann_bruteforce_topk",
-    "ann_bruteforce_vectorized",
-    "ann_lsh_buckets",
-    "ann_lsh_probe",
-    "ann_ivf_grid",
-    "embedding_centroid_per_label",
-    # late-round-3 additions (demoted below ANN so round 4's ~50-row budget
-    # lands on exactly red+streaming+datetime/crypto/JSON/types/sources/
-    # UDFs/recursive/ANN; these lead round 5)
-    "ts_multires_rollup",
-    "ts_gap_fill_daily",
-    "tpcds_above_group_avg",
-    "tpcds_deviation_from_avg",
-    "fn_bitwise_ops",
-    "fn_string_transform_extra",
-    "arr_zip_position_slice",
-    # LLM-pipeline: text analysis
-    "text_token_stats",
-    "text_langid_ngram",
-    "text_quality_score",
-    "text_fingerprint",
-    "text_winnowing_fingerprint",
-    "text_pii_redact",
-    "text_paragraph_dedup",
-    "pipeline_c4_style_filter",
-    # round-4 decontamination / repetition / tf-idf additions
-    "text_decontam_flags",
-    "text_decontam_pair_overlap",
-    "text_repetition_gopher",
-    "text_tfidf_top_terms",
-    # round-4 JOB second tranche
-    "job_two_nation_arms_crossed",
-    "job_leftjoin_null_reject",
-    "job_between_numeric_dims",
-    "job_distinct_over_star",
-    "job_substring_prefix_probe",
-    "job_or_across_two_dims",
-    "job_inlist_notin_mix",
-    "job_min_over_expression",
-    "job_like_prefix_suffix",
-    "job_three_fenced_arms",
-    "job_double_date_window",
-    "job_double_aliased_arms_8way",
-    # round-4 TPC-DS third tranche
-    "tpcds_moving_avg_flag",
-    "tpcds_item_lifecycle",
-    "tpcds_rank_tie_semantics",
-    "tpcds_consecutive_year_growth",
-    "tpcds_basket_band_customers",
-    "tpcds_percent_rank_decile",
-    "tpcds_order_gap_stats",
-    "tpcds_rollup_subtotals_only",
-    "tpcds_ntile_decile_profile",
-    "tpcds_return_ratio_rank",
-    # round-4 event-analytics family
-    "evt_cohort_retention",
-    "evt_funnel_ordered",
-    "evt_rfm_segments",
-    "evt_value_band_histogram",
-    # round-4 graph + dataset-curation families
-    "graph_pagerank_purchases",
-    "graph_triangle_count",
-    "inc_rollup_merge",
-    "merge_upsert_latest_wins",
-    "ts_anomaly_zscore_minutes",
-    "ts_percentile_bands_daily",
-    "ts_rolling_median_weekly",
-    "tpcds_buy_return_rebuy",
-    "tpcds_or_of_ands_bands",
-    "tpcds_within_pct_two_channels",
-    "cur_token_budget_greedy",
-    "dedup_cluster_size_profile",
-    "ann_recall_eval",
-    "window_count_distinct_emulated",
-    "window_exclude_current_emulated",
-    "window_qualify_emulated",
-    "window_filter_clause_emulated",
-    "fn_greatest_least_null_semantics",
-    # round-4 TPC-DS fourth tranche + JOB third mini-tranche
-    "tpcds_two_level_having",
-    "tpcds_quarter_seasonality",
-    "tpcds_freq_monetary_matrix",
-    "tpcds_spread_by_group",
-    "tpcds_lagged_share_change",
-    "tpcds_median_vs_mean_gap",
-    "tpcds_first_order_cohort_value",
-    "tpcds_pareto_coverage",
-    "job_nullif_is_null_fence",
-    "job_triple_like_or",
-    "job_count_only_widest",
-    "job_escape_like_dim",
-    "table_fingerprint_orders",
-    "layout_zorder_tiles",
-    "tpcds_three_way_intersect",
-    "tpcds_three_way_except",
-    "tpcds_full_outer_classify",
-    "tpcds_union_channel_tagging",
-    "tpcds_or_chain_dim_subquery",
-    "tpcds_quarter_share_chain",
-    "h2o_join_medium",
-    "h2o_join_big",
-    "cur_balanced_per_class_sample",
-    "cur_hash_split_leakfree",
-    "cur_source_mixture_budget",
-    "cur_quality_curriculum_buckets",
-    # LLM-pipeline: multimodal plumbing
-    "mm_binary_plumbing",
-    "mm_decode_features",
-    "mm_frame_sample",
-    "mm_audio_window_rms",
-    "mm_image_resize_pool",
-    # ---- round-5: pull the judge-named tail stragglers inside the
-    # two-sweep horizon (they otherwise queue at positions 186-198,
-    # behind module-order bulk a 50-row/round budget reaches only in
-    # round 8+) — r4 verdict item 4.
-    "orc_scan_roundtrip",
-    "prepared_statement_params",
-    "pivot_wide_agg",
-    "stream_dedup_within_watermark",
 )
 
 
@@ -516,20 +255,14 @@ def _stale_edited(green: set[str]) -> set[str]:
 def _reorder_for_sweep() -> None:
     """Rebuild REGISTRY insertion order for the driver's ~50-row sweep.
 
-    Ranks: (0) unproven SWEEP_PRIORITY names, (1) latest-record FAILs,
-    (2) never-swept / demoted names in module order, (3) proven greens.
-
-    FRESHNESS ROTATION (r11 verdict item 2): within the proven-green
-    tail, names queue by ASCENDING round of their latest driver record
-    (module order tiebreak), so once the unproven prefix drains, the
-    driver's slack budget lands on the rows whose evidence is OLDEST
-    (round 1 first).  Each re-proof lands a newer record and rotates
-    the row to the back — self-maintaining, no manual cohort selection.
-    The age key is the RECORD round, not the ledger blessing round (r12
-    review: a green can be legitimately ledger-absent — e.g. an
-    fp-proven old-round record whose round's artifact commit is unknown
-    — and treating those as "fresh" would exempt exactly the stalest
-    rows from the rotation; every green has a record by construction).
+    Ranks: (0) latest-record FAILs, (1) never-swept / demoted names in
+    module order, (2) proven greens by ASCENDING round of their latest
+    driver record, module order breaking ties (the FRESHNESS ROTATION,
+    r11 verdict item 2): once the unproven prefix drains, the slack
+    budget lands on the OLDEST evidence, and each re-proof rotates its
+    row to the back.  The age key is the RECORD round, not the ledger
+    blessing round (r12 review: a legitimately ledger-absent green is
+    not necessarily fresh; every green has a record by construction).
     SLA target: no proven row's newest driver evidence older than ~6
     rounds (~541 rows / ~31 slack slots/round ≈ 17-round full cycle,
     front-loaded on the oldest cohorts)."""
@@ -540,17 +273,14 @@ def _reorder_for_sweep() -> None:
     records = _latest_records(root)
     names = list(REGISTRY)
     rank: dict[str, tuple[int, int, int]] = {}
-    prio = {n: i for i, n in enumerate(SWEEP_PRIORITY)}
     for pos, name in enumerate(names):
-        if name in prio and name not in green:
-            rank[name] = (0, 0, prio[name])
-        elif name in failed:
-            rank[name] = (1, 0, pos)
+        if name in failed:
+            rank[name] = (0, 0, pos)
         elif name not in green:
-            rank[name] = (2, 0, pos)
+            rank[name] = (1, 0, pos)
         else:
             rnd = records[name][1] if name in records else 10**6
-            rank[name] = (3, rnd, pos)
+            rank[name] = (2, rnd, pos)
     ordered = sorted(names, key=rank.__getitem__)
     snapshot = {name: REGISTRY[name] for name in ordered}
     REGISTRY.clear()

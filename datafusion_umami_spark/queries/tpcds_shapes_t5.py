@@ -183,11 +183,27 @@ _Q64_WIN = """
     LIMIT 1000
     """
 
+# probe rows: every (cust, part, yr) group in the final's year fence with
+# its LEAD partner — the next_yr = yr + 1 gate keeps consecutive years
+# and rejects later-year partners, and the price test keeps declines
+_W64 = f"""WITH buy AS ({_BUY64}), w AS (
+      SELECT yr, best_price,
+             LEAD(yr) OVER (PARTITION BY cust, part ORDER BY yr) AS next_yr,
+             LEAD(best_price) OVER (PARTITION BY cust, part ORDER BY yr)
+                 AS next_price
+      FROM buy)
+    SELECT COUNT(*) FROM w WHERE yr BETWEEN 1996 AND 2000 AND"""
+
 register_sql(
     "tpcds_twice_joined_wide_star",
     _Q64_WIN,
     tags=("tpcds", "self-join", "wide-star", "rebuy"),
     bench=True,
+    discrimination=probe(
+        consecutive_pairs=f"{_W64} next_yr = yr + 1",
+        gap_rejected=f"{_W64} next_yr > yr + 1",
+        decline_survivors=f"{_W64} next_yr = yr + 1 AND next_price < best_price",
+    ),
 )
 
 # --- q23: frequent items in BOTH years x best customers -------------------

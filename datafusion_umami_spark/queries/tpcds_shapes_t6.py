@@ -454,11 +454,24 @@ _Q75_WIN = """
     LIMIT 500
     """
 
+# probe rows: every (ch, part, yr) group with its LAG partner — the
+# prev_yr = yr - 1 gate keeps consecutive years and rejects earlier-year
+# partners, and the 10 * qty < 9 * prev_qty test keeps declines
+_W75 = f"""WITH channel_sales AS ({_SALES75}), t AS (
+      SELECT yr, qty, LAG(yr) OVER w AS prev_yr, LAG(qty) OVER w AS prev_qty
+      FROM channel_sales WINDOW w AS (PARTITION BY ch, part ORDER BY yr))
+    SELECT COUNT(*) FROM t WHERE"""
+
 register_sql(
     "tpcds_yearly_decline_union",
     _Q75_WIN,
     tags=("tpcds", "q75", "decline", "window"),
     bench=True,
+    discrimination=probe(
+        consecutive_pairs=f"{_W75} prev_yr = yr - 1",
+        gap_rejected=f"{_W75} prev_yr < yr - 1",
+        decline_survivors=f"{_W75} prev_yr = yr - 1 AND 10 * qty < 9 * prev_qty",
+    ),
 )
 
 # --- q31: quarter-over-quarter growth, web vs store, per region (split:

@@ -93,7 +93,7 @@ def register(
     Either way the result must be a `queries/` module — the sweep-order
     tests separate tranche additions from the legacy backlog by
     `spec.module`, so a silent mis-attribution (r7 ADVICE item 1) would
-    corrupt the prove-down horizon accounting.  Fail loudly instead.
+    corrupt the sweep-order accounting.  Fail loudly instead.
     """
 
     module = module or _registering_module()
@@ -117,26 +117,6 @@ def register(
     return deco
 
 
-def _plain_sql_fn(spark_sql: str):
-    """Runner for SQL specs WITHOUT a spread opt-in.
-
-    BYTE-IDENTITY NOTE (r14): the nested `fn` reproduces the pre-r14
-    registrar closure exactly — same text, same nesting depth — because
-    `inspect.getsource(spec.fn)` is salted into every SQL spec's ledger
-    fingerprint (fingerprint.py).  Keeping it byte-stable keeps specs
-    whose own text did not change proven-as-written; editing THIS
-    closure mass-demotes every plain SQL spec, so don't (the spread
-    variant lives in register_sql and is fingerprint-distinct by
-    design)."""
-    from datafusion_umami_spark.tables import register_views
-
-    def fn(spark: SparkSession, sf_dir: str) -> DataFrame:
-        register_views(spark, sf_dir)
-        return spark.sql(spark_sql)
-
-    return fn
-
-
 def register_sql(
     name: str,
     spark_sql: str,
@@ -153,23 +133,19 @@ def register_sql(
     ANSI-compatible subset this keeps the two sides trivially in sync.
     `spread_tables` opts named fact views into the scale-adaptive scan
     spread for this query (tables._maybe_spread; r14 measured per-query).
+    The fingerprint covers the SQL and `fn._sql_shape`, not this closure's
+    source (fingerprint.spec_fingerprint).
     """
+    # imported here, not at module level: perfbench/tracing.py wraps
+    # tables.register_views before the registry loads
     from datafusion_umami_spark.tables import register_views
 
-    if spread_tables:
-        # Spread opt-ins get their own closure: its source differs from
-        # the plain one, so the ledger fingerprint demotes the spec
-        # until a fresh driver row proves the spread path — exactly the
-        # conservative behavior the ledger wants for a changed
-        # execution path.
-        def fn(spark: SparkSession, sf_dir: str) -> DataFrame:
-            register_views(spark, sf_dir, spread=spread_tables)
-            return spark.sql(spark_sql)
-
-    else:
-        fn = _plain_sql_fn(spark_sql)
+    def fn(spark: SparkSession, sf_dir: str) -> DataFrame:
+        register_views(spark, sf_dir, spread=spread_tables)
+        return spark.sql(spark_sql)
 
     fn.__doc__ = spark_sql
+    fn._sql_shape = ("sql", tuple(spread_tables))
     register(
         name,
         oracle if oracle is not None else spark_sql,

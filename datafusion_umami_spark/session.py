@@ -10,6 +10,10 @@ Scale notes (100 TB design):
   broadcast-join demotion replace the reference's umami adaptive layer
   (SURVEY.md §0) — Spark's executor-side spill (TaskMemoryManager,
   UnsafeExternalSorter, spillable hash agg) covers out-of-core robustness.
+- Host-sized defaults, each overridable by its env var: local[N] and the
+  initial shuffle partitions use the CPUs this process may run on
+  (`SPARK_GRAFT_CPUS`), the driver heap half of physical memory
+  (`SPARK_GRAFT_DRIVER_MEM`).
 - `spark.sql.shuffle.partitions` here defaults to local-core count; on a
   cluster AQE's `advisoryPartitionSizeInBytes` governs actual post-shuffle
   parallelism, so the static number only seeds the initial plan.
@@ -22,8 +26,13 @@ import os
 
 from pyspark.sql import SparkSession
 
+CPUS = os.environ.get("SPARK_GRAFT_CPUS") or str(len(os.sched_getaffinity(0)))
+_PHYS_BYTES = os.sysconf("SC_PAGE_SIZE") * os.sysconf("SC_PHYS_PAGES")
+# half of physical memory in whole GiB, at least 1g
+HEAP = os.environ.get("SPARK_GRAFT_DRIVER_MEM") or f"{max(1, _PHYS_BYTES // 2**31)}g"
+
 _DEFAULTS = {
-    "spark.sql.shuffle.partitions": os.environ.get("SPARK_GRAFT_CPUS", "32"),
+    "spark.sql.shuffle.partitions": CPUS,
     "spark.sql.adaptive.enabled": "true",
     "spark.sql.adaptive.coalescePartitions.enabled": "true",
     "spark.sql.adaptive.skewJoin.enabled": "true",
@@ -45,7 +54,7 @@ _DEFAULTS = {
     # "Timestamp ns truncated to µs").
     "spark.sql.legacy.parquet.nanosAsLong": "true",
     "spark.ui.enabled": "false",
-    "spark.driver.memory": os.environ.get("SPARK_GRAFT_DRIVER_MEM", "48g"),
+    "spark.driver.memory": HEAP,
 }
 
 
@@ -53,12 +62,11 @@ def get_spark(app_name: str = "datafusion_umami_spark", **overrides: str) -> Spa
     """Build (or fetch) the tuned SparkSession.
 
     `master` comes from the environment when launched via spark-submit; for
-    local runs we default to local[N] with N = SPARK_GRAFT_CPUS (default 32).
+    local runs we default to local[N] with N = `CPUS`.
     """
-    cpus = os.environ.get("SPARK_GRAFT_CPUS", "32")
     builder = SparkSession.builder.appName(app_name)
     if not os.environ.get("SPARK_MASTER") and not os.environ.get("MASTER"):
-        builder = builder.master(f"local[{cpus}]")
+        builder = builder.master(f"local[{CPUS}]")
     conf = dict(_DEFAULTS)
     conf.update(overrides)
     for k, v in conf.items():

@@ -2,19 +2,18 @@
 
 The driver proves ~50 queries per round in REGISTRY insertion order;
 the reorder must therefore (a) put no already-proven query ahead of
-unproven work, (b) lead with the explicit priority backlog, and (c)
-stay deterministic so two imports agree.
+unproven work, (b) keep every unproven name inside a contiguous prefix
+a budget based at position 0 can reach, and (c) stay deterministic so
+two imports agree.  The fingerprints that decide "proven" hash what a
+spec means — its SQL, oracle and shape — so the tests at the end pin
+that too.
 """
 
 from __future__ import annotations
 
 import json
 
-from datafusion_umami_spark.queries import (
-    SWEEP_PRIORITY,
-    _driver_history,
-    _driver_history_from,
-)
+from datafusion_umami_spark.queries import _driver_history, _driver_history_from
 from datafusion_umami_spark.registry import REGISTRY, _load_all
 
 _load_all()
@@ -38,8 +37,8 @@ def test_stale_no_oracle_record_does_not_prove_an_oracled_spec(tmp_path):
 def test_approx_aggs_reclassified_unproven_until_hash_row_lands():
     """Live check of the same contract: the round-6 tolerance-banded
     approx aggregates carry real oracles, so their r1/r4 no_oracle
-    records must not classify them green (they sit in SWEEP_PRIORITY /
-    the failed rank and re-enter the sweep front).  Self-retiring: once
+    records must not classify them green (they sit in the unproven /
+    failed ranks and re-enter the sweep front).  Self-retiring: once
     a CORRECTNESS artifact records their hash rows they classify green
     and drop to the back of the sweep (budget hygiene is pinned
     globally by test_no_proven_green_query_ahead_of_unproven); a LATER
@@ -55,11 +54,6 @@ def test_approx_aggs_reclassified_unproven_until_hash_row_lands():
         if name in green:
             continue  # hash row landed; re-enters below if it regresses
         assert name in front, f"{name} not in sweep front-50"
-
-
-def test_priority_names_all_registered():
-    missing = [n for n in SWEEP_PRIORITY if n not in REGISTRY]
-    assert not missing, f"SWEEP_PRIORITY names not in registry: {missing}"
 
 
 def test_no_proven_green_query_ahead_of_unproven():
@@ -89,25 +83,6 @@ def test_unproven_set_occupies_a_contiguous_prefix():
         f"unproven names past position {len(unproven)}: "
         f"{sorted(unproven - prefix)[:5]}"
     )
-
-
-def test_red_row_and_streaming_lead_the_queue():
-    """Round-3 verdict directives 1 and 6: the single red driver row and
-    the four unproven streaming queries must fit any plausible budget."""
-    green, _failed = _driver_history()
-    front = list(REGISTRY)[:5]
-    want = [n for n in (
-        "agg_approx_percentile", "stream_tumbling_counts",
-        "stream_sliding_window", "stream_static_join", "session_window_agg",
-    ) if n not in green]
-    assert front[: len(want)] == want, f"queue front diverged: {front}"
-
-
-def test_front_of_queue_is_the_priority_backlog():
-    green, _failed = _driver_history()
-    want = [n for n in SWEEP_PRIORITY if n not in green]
-    got = list(REGISTRY)[: len(want)]
-    assert got == want, f"front of sweep queue diverged: {got[:5]} != {want[:5]}"
 
 
 def test_legacy_backlog_is_exhausted():
@@ -510,14 +485,11 @@ def test_legacy_backlog_is_exhausted():
                   # closures changed for measured perf wins; every name
                   # re-verified 541/541 at sf0.01 + sf0.1 + hostile in
                   # the round battery):
-                  # (a) scan-spread opt-ins: the spread_tables=/
-                  # table(spread=True) plumbing changes the registrar
-                  # closure only for OPTED-IN specs (the module-level
-                  # _plain_sql_fn/_plain_split_fn factories keep every
-                  # other spec byte-identical) — the 11 opted-in
-                  # fingerprints demote until fresh driver rows land
-                  # (dedup_minhash_lsh's opt-in lives in a helper, no
-                  # fp change);
+                  # (a) scan-spread opt-ins: spread_tables= is part of
+                  # a SQL spec's fingerprinted shape, so only OPTED-IN
+                  # specs changed — the 11 opted-in fingerprints demote
+                  # until fresh driver rows land (dedup_minhash_lsh's
+                  # opt-in lives in a helper, no fp change);
                   "tpch_q1", "tpch_q18", "agg_high_cardinality",
                   "tpcds_rollup_rank", "text_token_stats",
                   # (b) pipeline_c4_style_filter: split-materialized
@@ -654,88 +626,50 @@ def test_r11_reproofs_landed_and_queue_front_finishes_the_provedown():
         assert ledger[name]["round"] >= 11, f"{name} not blessed at r11+"
     # The sanctioned demotions (see test_legacy_backlog_is_exhausted for
     # the current round's rationale) re-enter the queue AHEAD of the
-    # addition tail — in sweep (module import) order — until fresh
+    # addition tail — in module import order, then registration order
+    # within a module (listed so below) — until fresh
     # driver rows land on the fixed texts.  r13 set: the five
     # de-globalized quantile-banding specs + the nine ADVICE-batch
     # texts (finite-norm fence ×7, variant try_cast, mixture widening).
     demoted = [
         n
-        for n in (# r14: the priority-ranked names lead the whole queue
-                  # in SWEEP_PRIORITY order when demoted — the
-                  # optimization round's spread/split/pagerank opt-ins
-                  # (sanctioned batch 9) join the ntile/triangle/pareto
-                  # probe fixes here
-                  "tpcds_rollup_rank", "text_token_stats",
-                  "pipeline_c4_style_filter",
-                  "tpcds_ntile_decile_profile",
-                  "graph_pagerank_purchases", "graph_triangle_count",
-                  "tpcds_pareto_coverage", "agg_high_cardinality",
-                  # r14 vacuous-HAVING batch: h2o and clickbench import
-                  # BEFORE tpcds_shapes/tpch, so these lead the
-                  # module-order segment (within clickbench,
-                  # registration line order)
-                  "h2o_groupby_highcard", "cb_regex_extract_agg",
-                  "cb_stats_having", "cb_url_length_having",
-                  "cb_referer_domain_agg", "cb_ext_stddev_var_having",
-                  # r14 batch 8: quantiles_per_pair registers in
-                  # clickbench (line order after stddev_var_having)
-                  "cb_ext_quantiles_per_pair",
-                  "subq_in_correlated_filter", "subq_lateral_topn",
-                  "subq_exists_correlated_agg",
-                  "intersect_all", "except_distinct", "filter_like_ilike",
-                  "sort_nulls_ordering", "sort_multicol_large",
-                  "distinct_on_first_line", "fn_datetime_make_parse",
-                  "json_variant_ops",
-                  "types_decimal_arith", "types_interval_arith",
-                  "types_timestamp_precision",
-                  "csv_malformed_modes",
-                  "parquet_codec_roundtrip", "ann_bruteforce_topk",
-                  "ann_bruteforce_vectorized", "ann_lsh_probe",
-                  "ann_ivf_grid",
-                  "evt_rfm_segments", "inc_rollup_merge",
-                  "merge_upsert_latest_wins",
-                  "ts_anomaly_zscore_minutes", "ts_rolling_median_weekly",
-                  "cur_token_budget_greedy",
-                  "ann_recall_eval", "tpcds_freq_monetary_matrix",
-                  "cur_source_mixture_budget",
-                  "cur_quality_curriculum_buckets",
-                  "subq_scalar_uncorrelated",
-                  "subq_scalar_correlated_projection",
-                  "dedup_embedding_cosine",
-                  "ddl_set_show_conf", "cache_table_scan",
-                  "sample_stratified_topk",
-                  "repartition_by_range", "ann_ivf_trained",
-                  "join_left_anti", "join_right_semi",
-                  "join_in_or_subquery", "join_salted_skew",
-                  # r14: tpch imports after tpcds_shapes, its six in
-                  # registration order (q1/q18 = spread opt-ins,
-                  # sanctioned batch 9); windows.py then job_shapes_t3
-                  # lead the late-tranche import block (before t4/t5)
-                  "tpch_q1", "tpch_q11", "tpch_q18",
-                  "tpch_q20", "tpch_q21", "tpch_q22",
-                  "window_first_last_nth", "window_running_sum_rows",
-                  "job_notnull_or_like_fence",
-                  "job_five_alias_fact_clique",
-                  # tpcds_shapes_t5 imports after tpch; registration
-                  # order within the module (wide_star = the r14 stage
-                  # year fence)
-                  "tpcds_intersect_driven_sales",
-                  "tpcds_twice_joined_wide_star",
-                  "tpcds_or_local_or_subquery",
-                  "tpcds_volatile_items_cross_month",
-                  # clickbench_ext2 imports between t5 and t6 (q4
-                  # registers before q5); job_shapes_t5 follows ext2
-                  "cb_ext_q4_median_rank", "cb_ext_q5_p95_approx",
-                  "job_keyword_in8_triple_clique",
-                  "job_double_link_two_hops",
-                  # t6 imports before t8; within t8, zip before qty
-                  # before ship
-                  "tpcds_except_chain_count",
-                  "tpcds_yearly_decline_union",
-                  "job_t6_four_bridge_clique",
-                  "tpcds_t8_zip_prefix_dense",
-                  "tpcds_t8_qty_demand_offset_join",
-                  "tpcds_t8_ship_exists_notexists")
+        for n in (
+            "agg_high_cardinality", "subq_scalar_uncorrelated",
+            "subq_scalar_correlated_projection", "subq_in_correlated_filter",
+            "subq_lateral_topn", "subq_exists_correlated_agg",
+            "filter_like_ilike", "sort_nulls_ordering",
+            "distinct_on_first_line", "intersect_all", "except_distinct",
+            "sort_multicol_large", "fn_datetime_make_parse",
+            "json_variant_ops", "types_decimal_arith", "types_interval_arith",
+            "types_timestamp_precision", "csv_malformed_modes",
+            "parquet_codec_roundtrip", "dedup_embedding_cosine",
+            "h2o_groupby_highcard", "cb_regex_extract_agg", "cb_stats_having",
+            "cb_url_length_having", "cb_referer_domain_agg",
+            "cb_ext_stddev_var_having", "cb_ext_quantiles_per_pair",
+            "tpcds_rollup_rank", "tpcds_ntile_decile_profile",
+            "tpcds_freq_monetary_matrix", "tpcds_pareto_coverage",
+            "ddl_set_show_conf", "cache_table_scan", "sample_stratified_topk",
+            "repartition_by_range", "merge_upsert_latest_wins",
+            "ann_bruteforce_topk", "ann_bruteforce_vectorized",
+            "ann_lsh_probe", "ann_ivf_grid", "ann_ivf_trained",
+            "ann_recall_eval", "text_token_stats", "pipeline_c4_style_filter",
+            "evt_rfm_segments", "cur_source_mixture_budget",
+            "cur_quality_curriculum_buckets", "cur_token_budget_greedy",
+            "graph_pagerank_purchases", "graph_triangle_count",
+            "inc_rollup_merge", "ts_anomaly_zscore_minutes",
+            "ts_rolling_median_weekly", "tpch_q1", "tpch_q11", "tpch_q18",
+            "tpch_q20", "tpch_q21", "tpch_q22", "join_left_anti",
+            "join_right_semi", "join_in_or_subquery", "join_salted_skew",
+            "window_first_last_nth", "window_running_sum_rows",
+            "job_notnull_or_like_fence", "job_five_alias_fact_clique",
+            "tpcds_intersect_driven_sales", "tpcds_twice_joined_wide_star",
+            "tpcds_or_local_or_subquery", "tpcds_volatile_items_cross_month",
+            "cb_ext_q4_median_rank", "cb_ext_q5_p95_approx",
+            "job_keyword_in8_triple_clique", "job_double_link_two_hops",
+            "tpcds_except_chain_count", "tpcds_yearly_decline_union",
+            "job_t6_four_bridge_clique", "tpcds_t8_zip_prefix_dense",
+            "tpcds_t8_qty_demand_offset_join",
+            "tpcds_t8_ship_exists_notexists")
         if n not in green
     ]
     still_unproven = demoted + [
@@ -1209,3 +1143,54 @@ def test_entry_spec_fingerprints_surface():
     assert set(fps) == set(REGISTRY)
     for name in list(REGISTRY)[:5] + list(REGISTRY)[-5:]:
         assert fps[name] == spec_fingerprint(REGISTRY[name])
+
+
+def _stand_in(fn, **attrs):
+    """A different callable carrying `fn`'s docstring and SQL shape."""
+
+    def stand_in(spark, sf_dir):  # pragma: no cover - never called
+        raise AssertionError("fingerprinting must not run the spec")
+
+    stand_in.__doc__ = fn.__doc__
+    if hasattr(fn, "_sql_shape"):
+        stand_in._sql_shape = fn._sql_shape
+    for k, v in attrs.items():
+        setattr(stand_in, k, v)
+    return stand_in
+
+
+def test_fingerprint_hashes_what_a_spec_means():
+    """A SQL spec's fingerprint covers its SQL, oracle and shape (spread
+    tables / stage views), not the registrar closure that runs it — so
+    rewriting a registrar demotes nothing, while any change to what the
+    spec means still does.  A DataFrame spec's shape is its source."""
+    import dataclasses
+
+    from datafusion_umami_spark.fingerprint import spec_fingerprint
+
+    def fp(spec, **attrs):
+        return spec_fingerprint(
+            dataclasses.replace(spec, fn=_stand_in(spec.fn, **attrs)))
+
+    plain, spread, split, frame = (
+        REGISTRY[n] for n in
+        ("proj_expressions", "tpch_q18", "tpch_q11", "tpch_q5"))
+    assert plain.fn._sql_shape == ("sql", ())
+    assert spread.fn._sql_shape == ("sql", ("lineitem",))
+    assert split.fn._sql_shape == ("split", ("q11_g_m",))
+    assert not hasattr(frame.fn, "_sql_shape")
+
+    for spec in (plain, spread, split):
+        # same docstring + shape, different callable: same fingerprint
+        assert fp(spec) == spec_fingerprint(spec), spec.name
+        # the SQL and the oracle are fingerprinted
+        assert fp(spec, __doc__=spec.fn.__doc__ + " ") != fp(spec)
+        assert spec_fingerprint(
+            dataclasses.replace(spec, oracle=spec.oracle + " ")
+        ) != spec_fingerprint(spec)
+    # the spread set and the stage view names are fingerprinted
+    assert fp(plain, _sql_shape=("sql", ("lineitem",))) != fp(plain)
+    assert fp(spread, _sql_shape=("sql", ())) != fp(spread)
+    assert fp(split, _sql_shape=("split", ("q11_g_x",))) != fp(split)
+    # a DataFrame spec still follows its callable's source
+    assert fp(frame) != spec_fingerprint(frame)
