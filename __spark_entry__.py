@@ -99,14 +99,12 @@ def spec_fingerprints() -> dict[str, str]:
     specs, the callable source for DataFrame specs — + the
     shared-semantics salt; fingerprint.spec_fingerprint).
 
-    OPTIONAL driver hook (r10 verdict item 4 / r9 ADVICE item 1): if the
-    sweep records each swept name's fingerprint as an `"fp"` field in
-    its CORRECTNESS record, the artifact itself certifies the text the
-    green row executed — the round-start ledger blessing then reads the
-    artifact directly instead of proving working-tree == swept-tree,
-    and the sweep classifier demotes any post-sweep edit immediately
-    (queries/__init__._artifact_fp_split).  Cheap: pure hashing, no
-    Spark session required."""
+    OPTIONAL driver hook (r10 verdict item 4): a sweep may record these
+    next to its CORRECTNESS rows.  The repo itself does not read such a
+    field: which specs are proven is decided by the committed ledger
+    (`queries/sweep_fingerprints.json`, blessed at round start by
+    tools/update_sweep_fingerprints.py), which holds these same
+    fingerprints.  Cheap: pure hashing, no Spark session required."""
     from datafusion_umami_spark.fingerprint import spec_fingerprint
     from datafusion_umami_spark.registry import REGISTRY, _load_all
 

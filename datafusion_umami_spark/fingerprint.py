@@ -15,8 +15,9 @@ infrastructure (the registrars, tables.py loading/normalization,
 operators/materialize.py, streaming/runner.py) are NOT fingerprinted —
 they changed in most rounds, so salting them would mass-demote the
 proven ledger; their correctness is instead re-proven every round by
-the full-registry sf0.01/sf0.1 verify legs (README verification
-paragraphs), which execute every spec end-to-end against DuckDB.
+the full-registry sf0.01/sf0.1 verify legs (`tools/verify_subset.py`,
+recorded per round in `CORRECTNESS_r*.json`), which execute every spec
+end-to-end against DuckDB.
 
 The committed ledger `queries/sweep_fingerprints.json` maps
 name -> {fp, round, sha} (sha = the swept tree the green row executed,
@@ -28,7 +29,8 @@ unless its green row is from the latest artifact AND the round-start
 blessing has not yet landed for it (fresh evidence only; once the
 ledger's max round catches up, absent == dropped and demotes).  A
 dropped ledger entry therefore re-queues a spec rather than laundering
-it into proven.
+it into proven.  The ledger is the only proof of text: no field of a
+CORRECTNESS record decides whether the current text is proven.
 
 Maintenance: `tools/update_sweep_fingerprints.py`, run at ROUND START
 (before any spec edits) so newly-green rows are blessed against the text
@@ -45,29 +47,10 @@ from __future__ import annotations
 import hashlib
 import inspect
 import json
-import re
 from functools import lru_cache
 from pathlib import Path
 
 LEDGER_PATH = Path(__file__).resolve().parent / "queries" / "sweep_fingerprints.json"
-
-_FP_SHAPE = re.compile(r"[0-9a-f]{64}")
-
-
-def record_fp(rec) -> str | None:  # type: ignore[no-untyped-def]
-    """The driver-stamped spec fingerprint of a CORRECTNESS record, iff
-    it carries a WELL-FORMED one (64-char lowercase-hex sha256).
-
-    Single extraction point for both consumers (r11 ADVICE item 4): the
-    sweep classifier (`queries/__init__._artifact_fp_split`) and the
-    blessing tool (`tools/update_sweep_fingerprints.py`) must agree on
-    what counts as an fp-carrying record or blessing and demotion
-    drift.  A malformed/truncated value is treated as fp-ABSENT, which
-    routes the record to the fail-safe ledger path (demotes unless the
-    ledger proves the current text) rather than trusting garbage on
-    either path."""
-    fp = rec.get("fp") if isinstance(rec, dict) else None
-    return fp if isinstance(fp, str) and _FP_SHAPE.fullmatch(fp) else None
 
 
 @lru_cache(maxsize=1)

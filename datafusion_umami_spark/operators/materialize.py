@@ -26,6 +26,7 @@ from __future__ import annotations
 from pyspark.sql import DataFrame
 
 from datafusion_umami_spark.operators.connected_components import _free_checkpoint
+from datafusion_umami_spark.tables import FACT_TABLES
 
 _LIVE: dict[str, DataFrame] = {}
 
@@ -42,13 +43,6 @@ PLAN_SHAPE_CONFS = (
     "spark.sql.autoBroadcastJoinThreshold",
     "spark.sql.adaptive.enabled",
     "spark.sql.files.maxPartitionBytes",
-)
-
-# The big fact tables of the driver schema — single source of truth for
-# the CTE-inlining detector (tools/audit_scans.py) and its pinning gate
-# (tests/test_plans.py::test_materialized_queries_do_not_rescan_facts).
-FACT_TABLES = frozenset(
-    {"lineitem", "orders", "events", "documents", "embeddings"}
 )
 
 

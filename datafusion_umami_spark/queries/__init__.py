@@ -99,26 +99,11 @@ def _driver_history() -> tuple[set[str], set[str]]:
     Two ledger-backed demotions on top (r8 verdict item 4, fingerprint.py):
     - a green name whose CURRENT spec fingerprint differs from its
       ledger entry is unproven (edited after proof);
-    - FAIL-SAFE: a green name MISSING from the ledger is unproven
-      unless its green row comes from the LATEST artifact (fresh
-      evidence the round-start tool has not blessed yet) — a dropped
-      ledger entry re-queues a spec rather than laundering it.  The
-      exemption deactivates once the blessing has LANDED for that
-      artifact (r10, r9 ADVICE item 2): when the ledger's max round has
-      caught up to the artifacts' max round, the round-start tool has
-      run, so any still-absent green name is a dropped or refused entry
-      and must demote.  RESIDUAL (documented; CLOSED for fp-carrying
-      records since r11): if the blessing never lands (tool refuses and
-      is never resolved), the exemption stays open for the round and
-      carries no text check — an absent fresh green edited mid-round
-      would classify proven on unswept text.  The enforcement point for
-      fp-LESS records remains the blessing tool's loud refusal plus
-      CLAUDE.md's mandatory ROUND START step.  When the driver stamps
-      each record with the swept spec's fingerprint (r10 verdict item
-      4, `__spark_entry__.spec_fingerprints()`), `_artifact_fp_split`
-      checks the text DIRECTLY against the artifact: a matching fp is
-      proven-as-written with no exemption needed, a mismatching fp
-      demotes immediately — even inside the fresh-artifact window.
+    - FAIL-SAFE: a green name MISSING from the ledger is unproven, so a
+      dropped entry re-queues a spec rather than laundering it.  The
+      one window: a green row from the LATEST artifact stays green
+      until the round-start blessing lands, i.e. while the ledger's max
+      round is behind the artifacts' max round.
     """
     from datafusion_umami_spark.fingerprint import load_ledger
     from datafusion_umami_spark.registry import REGISTRY
@@ -127,12 +112,9 @@ def _driver_history() -> tuple[set[str], set[str]]:
     oracled = {n for n, spec in REGISTRY.items() if spec.oracle is not None}
     records = _latest_records(root)
     green, failed = _classify(records, oracled)
-    fp_ok, fp_bad = _artifact_fp_split(records, green)
-    green -= fp_bad  # driver-stamped fp no longer matches current text
-    rest = green - fp_ok  # fp-less records: ledger logic below, unchanged
-    green -= _stale_edited(rest)
+    green -= _stale_edited(green)
     ledger = load_ledger()
-    absent = {n for n in rest if n not in ledger and n in green}
+    absent = {n for n in green if n not in ledger}
     if absent:
         max_round = max((rnd for _, rnd in records.values()), default=0)
         ledger_max = max((e.get("round", 0) for e in ledger.values()),
@@ -142,42 +124,6 @@ def _driver_history() -> tuple[set[str], set[str]]:
         else:
             green -= {n for n in absent if records[n][1] != max_round}
     return green, failed
-
-
-def _artifact_fp_split(
-    records: dict[str, tuple[dict, int]], green: set[str]
-) -> tuple[set[str], set[str]]:
-    """(ok, bad): green names whose latest driver record carries a
-    driver-stamped spec fingerprint, split by whether it matches the
-    CURRENT spec text.
-
-    r10 verdict item 4 / r9 ADVICE item 1: when the DRIVER records each
-    swept spec's fingerprint in the CORRECTNESS artifact (via
-    `__spark_entry__.spec_fingerprints()`), the artifact itself proves
-    the text — `ok` names are proven-as-written with no ledger
-    round-bridging exemption and no working-tree consultation, and
-    `bad` names (edited since the sweep, or deleted) demote immediately
-    even inside the fresh-artifact window.  This closes the documented
-    RESIDUAL above for fp-carrying records; fp-less legacy records keep
-    the ledger path unchanged.
-
-    fp extraction + shape validation live in `fingerprint.record_fp`
-    (r11 ADVICE item 4) — shared with the blessing tool so the two
-    consumers cannot drift; malformed values route to the fail-safe
-    ledger path."""
-    from datafusion_umami_spark.fingerprint import record_fp, spec_fingerprint
-    from datafusion_umami_spark.registry import REGISTRY
-
-    ok, bad = set(), set()
-    for n in green:
-        fp = record_fp(records[n][0])
-        if fp is None:
-            continue
-        if n in REGISTRY and fp == spec_fingerprint(REGISTRY[n]):
-            ok.add(n)
-        else:
-            bad.add(n)
-    return ok, bad
 
 
 def _latest_records(root: Path) -> dict[str, tuple[dict, int]]:

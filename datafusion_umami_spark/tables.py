@@ -32,10 +32,11 @@ TABLE_NAMES = (
 # threshold even at SF100; nation/region are constant-size in TPC-H).
 BROADCAST_TABLES = frozenset({"region", "nation"})
 
-# The corpus-scaling tables (same population as operators/materialize.py
-# FACT_TABLES): the only tables whose scans are worth force-spreading
-# when the file layout cannot split (see _maybe_spread below).
-SPREAD_TABLES = frozenset(
+# The big fact tables of the driver schema: the only tables whose scans
+# are worth force-spreading when the file layout cannot split (see
+# _maybe_spread below), and the tables the CTE-inlining detector counts
+# (operators/materialize.fact_scan_counts, tools/audit_scans.py).
+FACT_TABLES = frozenset(
     {"lineitem", "orders", "events", "documents", "embeddings"}
 )
 
@@ -243,7 +244,7 @@ def table(
     df = reader.parquet(path)
     if name == "events":
         df = normalize_events_ts(df, "timestamp_ntz")
-    if spread and name in SPREAD_TABLES:
+    if spread and name in FACT_TABLES:
         df = _maybe_spread(df, spark, path)
     return df
 

@@ -25,14 +25,14 @@ def _spread_exchanges(plan: str) -> int:
 
 def test_no_spread_by_default(spark, sf_dir, monkeypatch):
     monkeypatch.setattr(tables, "SPREAD_MIN_BYTES", 1)
-    for name in sorted(tables.SPREAD_TABLES):
+    for name in sorted(tables.FACT_TABLES):
         assert _spread_exchanges(_plan(table(spark, sf_dir, name))) == 0, name
 
 
 def test_no_spread_below_floor_at_test_scale(spark, sf_dir):
     # sf0.001 files are all under SPREAD_MIN_BYTES: even opted-in scans
     # keep the exact shape every plan gate in tests/test_plans.py pins.
-    for name in sorted(tables.SPREAD_TABLES):
+    for name in sorted(tables.FACT_TABLES):
         plan = _plan(table(spark, sf_dir, name, spread=True))
         assert _spread_exchanges(plan) == 0, name
 

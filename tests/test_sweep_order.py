@@ -733,24 +733,16 @@ def test_ledger_is_committed_and_covers_the_greens():
     assert not bad_sha, f"ledger entries without swept-tree sha: {bad_sha[:5]}"
 
 
-def test_ledger_tool_blessing_rules(tmp_path, monkeypatch):
-    """tools/update_sweep_fingerprints.py rules (r9 review finding 3):
-    a missing entry is blessed ONLY when its green row comes from the
-    latest artifact; a pre-latest missing entry is skipped (the
-    classifier fail-safe keeps it unproven); an existing entry with an
-    older round is re-blessed on the current text."""
-    import importlib.util
+def test_ledger_tool_blessing_rules(tmp_path):
+    """tools/update_sweep_fingerprints.py rules (r9 review finding 3),
+    exercised on the tool's own `apply_blessings`: a missing entry is
+    blessed ONLY when its green row comes from the latest artifact; an
+    existing entry is re-blessed only by a latest-artifact row (an
+    older round's swept text is unrecoverable); an entry edited after
+    its proof is left stale; an unregistered name is ignored."""
     import json as _json
-    from pathlib import Path
 
-    spec = importlib.util.spec_from_file_location(
-        "update_sweep_fingerprints",
-        str(Path(__file__).resolve().parents[1]
-            / "tools" / "update_sweep_fingerprints.py"),
-    )
-    tool = importlib.util.module_from_spec(spec)
-    spec.loader.exec_module(tool)
-
+    tool = _load_tool()
     ok = {"hash_match": True, "spark_rows": 1, "err": None}
     (tmp_path / "CORRECTNESS_r01.json").write_text(
         _json.dumps({"q_old_green": ok, "q_rebless": ok}))
@@ -761,26 +753,30 @@ def test_ledger_tool_blessing_rules(tmp_path, monkeypatch):
     assert max_round == 2
     assert greens == {"q_old_green": 1, "q_fresh_green": 2, "q_rebless": 2}
 
-    # replicate main()'s decision table without a registry (r10: the
-    # re-bless path carries the same latest-artifact guard as the add
-    # path — an older round's swept text is equally unrecoverable)
-    ledger = {"q_rebless": {"fp": "old-fp", "round": 1},
-              "q_stale_rebless": {"fp": "old-fp", "round": 0}}
-    greens["q_stale_rebless"] = 1  # re-proved, but not by the latest sweep
-    decisions = {}
-    for name, rnd in sorted(greens.items()):
-        ent = ledger.get(name)
-        if ent is None:
-            decisions[name] = "add" if rnd == max_round else "skip"
-        elif ent.get("round", 0) < rnd:
-            decisions[name] = "update" if rnd == max_round else "skip"
-    assert decisions == {
-        "q_fresh_green": "add",    # fresh evidence -> bless current text
-        "q_old_green": "skip",     # swept text unrecoverable -> re-queue
-        "q_rebless": "update",     # driver re-proved on the LATEST sweep
-        "q_stale_rebless": "skip",  # re-proof from an OLDER sweep: the
-        # preflight proves only the latest swept tree -> leave stale
+    greens.update(q_stale_rebless=1, q_edited=2, q_unchanged=2, q_deleted=2)
+    ledger = {
+        "q_rebless": {"fp": "old-fp", "round": 1, "sha": "s1"},
+        "q_stale_rebless": {"fp": "old-fp", "round": 0, "sha": "s0"},
+        "q_edited": {"fp": "proved-fp", "round": 2, "sha": "s2"},
+        "q_unchanged": {"fp": "fp:q_unchanged", "round": 2, "sha": "s2"},
+        "q_deleted": {"fp": "old-fp", "round": 1, "sha": "s1"},
     }
+    untouched = {n: dict(e) for n, e in ledger.items() if n != "q_rebless"}
+    added, updated, stale, skipped = tool.apply_blessings(
+        ledger, greens, max_round, swept="s2",
+        known=set(greens) - {"q_deleted"}, current_fp=lambda n: f"fp:{n}")
+
+    assert added == ["q_fresh_green"]  # fresh evidence -> current text
+    assert updated == ["q_rebless"]  # re-proved by the LATEST sweep
+    assert stale == ["q_edited"]  # edited after proof -> re-queue
+    # swept text unrecoverable: a missing entry from an older round, and
+    # a re-proof from an older sweep (the preflight proves only the latest)
+    assert skipped == ["q_old_green", "q_stale_rebless"]
+    assert ledger.pop("q_fresh_green") == {
+        "fp": "fp:q_fresh_green", "round": 2, "sha": "s2"}
+    assert ledger.pop("q_rebless") == {
+        "fp": "fp:q_rebless", "round": 2, "sha": "s2"}
+    assert ledger == untouched  # skipped, stale and unregistered entries
 
 
 def _load_tool():
@@ -877,8 +873,9 @@ def test_ledger_absent_exemption_deactivates_after_blessing(monkeypatch):
     ADVICE item 3): both the records AND the ledger are synthetic
     fixtures, so a freshly-landed driver artifact the blessing has not
     seen yet — the normal round-boundary window — cannot redden this
-    test.  The round-boundary pressure to run the blessing stays with
-    the README cumulative-count pin, which is intentional."""
+    test.  The README count pin that once forced the blessing is now
+    `test_every_registered_name_has_a_green_latest_record`, which reads
+    the artifacts only; running the blessing is the ROUND START step."""
     import datafusion_umami_spark.fingerprint as fpmod
     import datafusion_umami_spark.queries as qmod
     from datafusion_umami_spark.fingerprint import spec_fingerprint
@@ -949,179 +946,51 @@ def test_ledger_shas_match_git_provenance():
     assert not bad, f"{len(bad)} provenance mismatches: {bad[:5]}"
 
 
-def test_artifact_fp_records_prove_text_directly(monkeypatch):
-    """r10 verdict item 4 / r9 ADVICE item 1: a green record carrying a
-    DRIVER-stamped `fp` is text-proven by the artifact itself —
-
-      - matching fp  -> green regardless of ledger state or record
-        round (even an old-round green absent from the ledger);
-      - mismatched fp -> demoted immediately, even inside the
-        fresh-latest-artifact window the ledger exemption bridges
-        (this is the documented RESIDUAL, closed for fp records).
-    """
+def test_malformed_fp_routes_to_ledger_path(monkeypatch):
+    """No `fp` field of a CORRECTNESS record decides a rank: the ledger
+    alone proves the text.  Malformed, mismatching and matching fps all
+    classify exactly like an fp-less record."""
     import datafusion_umami_spark.fingerprint as fpmod
     import datafusion_umami_spark.queries as qmod
     from datafusion_umami_spark.fingerprint import spec_fingerprint
     from datafusion_umami_spark.queries import _driver_history
-    from datafusion_umami_spark.registry import REGISTRY
 
     names = [n for n, s in REGISTRY.items() if s.oracle is not None]
-    old_ok, fresh_bad, fresh_ok = names[0], names[1], names[2]
+    malformed, mismatched, old_absent = names[:3]
     rec = {"hash_match": True, "rows_match": True, "schema_match": True,
            "spark_rows": 1, "err": None}
     records = {
-        # old round, ledger-absent, fp matches current text -> green
-        old_ok: (dict(rec, fp=spec_fingerprint(REGISTRY[old_ok])), 5),
-        # LATEST round, fp does NOT match (edited post-sweep) -> demote
-        fresh_bad: (dict(rec, fp="0" * 64), 9),
-        # latest round, fp matches -> green (no ledger needed at all)
-        fresh_ok: (dict(rec, fp=spec_fingerprint(REGISTRY[fresh_ok])), 9),
+        malformed: (dict(rec, fp="THIS-IS-NOT-HEX"), 9),
+        # well-formed, but not the current text's fingerprint
+        mismatched: (dict(rec, fp="0" * 64), 9),
+        # well-formed and matching, but an older round's ledger-absent row
+        old_absent: (dict(rec, fp=spec_fingerprint(REGISTRY[old_absent])),
+                     5),
     }
     monkeypatch.setattr(qmod, "_latest_records", lambda root: dict(records))
-    monkeypatch.setattr(fpmod, "load_ledger", lambda path=None: {})
-    green, _failed = _driver_history()
-    assert old_ok in green, "matching driver fp must prove an old green"
-    assert fresh_ok in green, "matching driver fp must prove a fresh green"
-    assert fresh_bad not in green, (
-        "mismatched driver fp must demote even a latest-artifact green "
-        "(the pre-r11 exemption would have let it ride)")
-
-
-def test_blessing_tool_consumes_artifact_fps():
-    """r10 verdict item 4: `apply_blessings` blesses fp-carrying records
-    from the artifact alone — older-round greens bless from their own
-    round's swept sha, same-round artifact fps outrank tree-derived
-    entries, and fp-LESS records still require the proven tree."""
-    tool = _load_tool()
-    rec = {"hash_match": True, "spark_rows": 1, "err": None}
-    FP_A, FP_B, FP_C = "a" * 64, "b" * 64, "c" * 64
-    records = {
-        "q_old_fp": (dict(rec, fp=FP_A), 5),       # pre-latest + fp
-        "q_fresh_fp": (dict(rec, fp=FP_B), 9),     # latest + fp
-        "q_outrank": (dict(rec, fp=FP_C), 9),      # same-round override
-        "q_uncommitted_round": (dict(rec, fp=FP_A), 7),  # no sha known
-        "q_fpless_fresh": (dict(rec), 9),           # legacy record
-    }
-    greens = {n: rnd for n, (_rec, rnd) in records.items()}
-    ledger = {"q_outrank": {"fp": "tree-derived", "round": 9, "sha": "s9"}}
-    shas = {5: "s5", 9: "s9"}  # round 7's artifact is uncommitted
-
-    # tree NOT proven: fp records bless anyway; the fp-less one skips
-    added, updated, stale, skipped = tool.apply_blessings(
-        ledger, dict(greens), records, max_round=9, tree_proven=False,
-        swept=None, shas=shas, known=set(records),
-        current_fp=lambda n: (_ for _ in ()).throw(
-            AssertionError("working tree consulted on the artifact path")),
-    )
-    assert added == ["q_fresh_fp", "q_old_fp"]
-    assert updated == ["q_outrank"]
-    assert ledger["q_old_fp"] == {"fp": FP_A, "round": 5, "sha": "s5"}
-    assert ledger["q_fresh_fp"] == {"fp": FP_B, "round": 9, "sha": "s9"}
-    assert ledger["q_outrank"] == {"fp": FP_C, "round": 9, "sha": "s9"}
-    assert "q_fpless_fresh" in skipped and "q_uncommitted_round" in skipped
-    assert "q_fpless_fresh" not in ledger
-
-    # tree proven: the fp-less fresh record now blesses from the tree
-    added, updated, stale, skipped = tool.apply_blessings(
-        ledger, dict(greens), records, max_round=9, tree_proven=True,
-        swept="s9", shas=shas, known=set(records),
-        current_fp=lambda n: "tree-fp",
-    )
-    assert "q_fpless_fresh" in added
-    assert ledger["q_fpless_fresh"] == {"fp": "tree-fp", "round": 9,
-                                        "sha": "s9"}
-
-
-def test_record_fp_shape_validation():
-    """r11 ADVICE item 4: both fp consumers share `fingerprint.record_fp`,
-    which accepts ONLY a well-formed 64-char lowercase-hex sha256 —
-    malformed values are treated as fp-absent so they route to the
-    fail-safe ledger path instead of being trusted on either side."""
-    from datafusion_umami_spark.fingerprint import record_fp
-
-    good = "ab01" * 16
-    assert record_fp({"fp": good}) == good
-    for bad in ("", "deadbeef", good[:-1], good + "0", good.upper(),
-                "g" * 64, 42, None, ["x"]):
-        assert record_fp({"fp": bad}) is None, bad
-    assert record_fp({}) is None
-    assert record_fp(None) is None
-    assert record_fp("not-a-dict") is None
-
-
-def test_malformed_fp_routes_to_ledger_path(monkeypatch):
-    """A record with a malformed fp must behave exactly like an fp-less
-    record: classified by the ledger (here: blessed entry -> green),
-    never demoted by the fp mismatch arm."""
-    import datafusion_umami_spark.fingerprint as fpmod
-    import datafusion_umami_spark.queries as qmod
-    from datafusion_umami_spark.fingerprint import spec_fingerprint
-    from datafusion_umami_spark.queries import _driver_history
-
-    name = next(n for n, s in REGISTRY.items() if s.oracle is not None)
-    rec = {"hash_match": True, "rows_match": True, "schema_match": True,
-           "spark_rows": 1, "err": None, "fp": "THIS-IS-NOT-HEX"}
-    monkeypatch.setattr(qmod, "_latest_records",
-                        lambda root: {name: (rec, 9)})
+    # both entries at round 9 == the artifacts' max: the blessing landed
     monkeypatch.setattr(
         fpmod, "load_ledger",
-        lambda path=None: {name: {"fp": spec_fingerprint(REGISTRY[name]),
-                                  "round": 9, "sha": "f" * 40}})
+        lambda path=None: {n: {"fp": spec_fingerprint(REGISTRY[n]),
+                               "round": 9, "sha": "f" * 40}
+                           for n in (malformed, mismatched)})
     green, _failed = _driver_history()
-    assert name in green, "malformed fp must fall back to the ledger proof"
+    assert malformed in green, "malformed fp must fall back to the ledger proof"
+    assert mismatched in green, "a record's fp must not demote a ledgered green"
+    assert old_absent not in green, (
+        "a record's fp must not prove a ledger-absent green")
 
 
-def test_reconcile_provenance_requires_reproof_or_vouch():
-    """r11 ADVICE item 1 + r12 review hardening: after an artifact
-    delete/re-add, the sha-repair re-pins ONLY entries whose round's
-    current artifact re-proves their text — matching driver-stamped fp
-    on a PASSING row.  fp-less entries are held unless
-    --repair-provenance vouches; entries the artifact CONTRADICTS
-    (different fp, or a matching fp on a failed row) are never
-    repaired, vouch or not."""
+def test_blessing_tool_rejects_unknown_flags():
+    """The tool takes `--dry-run` and `--force` only: a typo or a retired
+    flag fails loudly instead of being ignored (no git needed)."""
+    import pytest
+
     tool = _load_tool()
-    FP = "a" * 64
-    art = {
-        "q_reproven": {"hash_match": True, "fp": FP},
-        "q_wrong_fp": {"hash_match": True, "fp": "b" * 64},
-        "q_fp_but_fail": {"hash_match": False, "fp": FP},
-        "q_fpless": {"hash_match": True},
-        "q_rows_only": {"err": "no_oracle", "spark_rows": 3, "fp": FP},
-    }
-
-    def fresh_ledger():
-        return {
-            "q_reproven": {"fp": FP, "round": 3, "sha": "old"},
-            "q_wrong_fp": {"fp": FP, "round": 3, "sha": "old"},
-            "q_fp_but_fail": {"fp": FP, "round": 3, "sha": "old"},
-            "q_fpless": {"fp": FP, "round": 3, "sha": "old"},
-            "q_rows_only": {"fp": FP, "round": 3, "sha": "old"},
-            "q_ok": {"fp": FP, "round": 3, "sha": "new"},
-            "q_unknown_round": {"fp": FP, "round": 7, "sha": "old"},
-        }
-
-    shas = {3: "new"}  # round 7's artifact uncommitted -> untouched
-    ledger = fresh_ledger()
-    repaired, held, contradicted = tool.reconcile_provenance(
-        ledger, shas, record_of=lambda rnd, name: art.get(name))
-    assert sorted(repaired) == ["q_reproven", "q_rows_only"]
-    assert held == ["q_fpless"]
-    assert sorted(contradicted) == ["q_fp_but_fail", "q_wrong_fp"]
-    assert ledger["q_reproven"]["sha"] == "new"
-    assert ledger["q_fpless"]["sha"] == "old"  # held: CI flags it loudly
-    assert ledger["q_wrong_fp"]["sha"] == "old"
-    assert ledger["q_fp_but_fail"]["sha"] == "old"
-    assert ledger["q_unknown_round"]["sha"] == "old"
-
-    ledger = fresh_ledger()
-    repaired, held, contradicted = tool.reconcile_provenance(
-        ledger, shas, record_of=lambda rnd, name: art.get(name), vouch=True)
-    # vouch covers ONLY the fp-less stray; contradictions stand
-    assert sorted(repaired) == ["q_fpless", "q_reproven", "q_rows_only"]
-    assert not held
-    assert sorted(contradicted) == ["q_fp_but_fail", "q_wrong_fp"]
-    assert ledger["q_fpless"]["sha"] == "new"
-    assert ledger["q_wrong_fp"]["sha"] == "old"
+    for argv in (["--repair-provenance"], ["--froce"]):
+        with pytest.raises(SystemExit) as e:
+            tool.main(argv)
+        assert e.value.code != 0, argv
 
 
 def test_entry_spec_fingerprints_surface():

@@ -25,43 +25,34 @@ SHARED with the sweep classifier via `queries/__init__._latest_records`
     (still green if the text never changed, re-queued otherwise);
   - ledger round == green round and fp differs -> LEAVE STALE: the spec
     was edited after its proof; the sweep classifier re-queues it until
-    a later round's green row re-blesses it.
+    a later round's green row re-blesses it;
+  - a name no longer registered is ignored (its entry stays, harmless).
 
 The round-1..8 entries were bootstrapped from each round's snapshot
 commit (the verdict commit's parent), i.e. from the exact historical
 text each green row ran against.
 
-Round-10 hardening (r9 verdict item 2, ADVICE items 1-2): the
-run-at-round-start precondition is now PROVED, not assumed — `preflight`
-refuses to bless from a dirty tree or after any post-sweep commit
-touching the package, because either breaks the "current tree ==
-swept tree" identity the blessing rests on.  Each blessed entry records
-the swept tree's `sha` (the parent of the commit that added the round's
-CORRECTNESS artifact) so provenance is auditable per entry.
-
-Round-11 (r10 verdict item 4): records carrying a DRIVER-stamped `"fp"`
-field (see `__spark_entry__.spec_fingerprints()`) are blessed from the
-artifact ALONE — the artifact certifies the swept text directly, so the
-tree-identity preflight, the latest-round restriction, and the
-working-tree fingerprint are all bypassed for them (older-round greens
-bless from their own round's swept sha).  The preflight + rules above
-remain in force for fp-less legacy records.
+The blessing rests on "current tree == swept tree", and `preflight`
+PROVES it rather than assuming it (r9 verdict item 2): it refuses a
+dirty package tree and any post-sweep commit touching the package.
+Each blessed entry records the swept tree's `sha` (the parent of the
+commit that added the round's CORRECTNESS artifact).  So main():
+  - proven tree -> bless;
+  - unproven tree with latest-round greens still to bless -> REFUSE
+    (exit 2), unless `--force` vouches for the swept text;
+  - `--force` cannot get past a BlessingError (no artifact, or the
+    newest one uncommitted): there is no swept tree to vouch for;
+  - unproven tree with nothing to bless -> report the counts; the
+    ledger is not rewritten.
 
 Usage: python tools/update_sweep_fingerprints.py [--dry-run] [--force]
-           [--repair-provenance]
-
---repair-provenance (r11 ADVICE item 1): after an artifact
-delete/re-add, entries whose round's current artifact re-proves their
-text (matching driver-stamped fp) re-pin their sha automatically;
-fp-less entries are HELD (the provenance CI test flags them loudly)
-unless this flag vouches for the re-pin explicitly.
 """
 
 from __future__ import annotations
 
+import argparse
 import subprocess
 import sys
-from functools import lru_cache as _functools_lru_cache
 from pathlib import Path
 
 ROOT = Path(__file__).resolve().parents[1]
@@ -151,43 +142,28 @@ def preflight(root: Path) -> list[str]:
     return problems
 
 
-def green_rounds(
-    root: Path, oracled: set[str], records: dict | None = None
-) -> tuple[dict[str, int], int]:
+def green_rounds(root: Path, oracled: set[str]) -> tuple[dict[str, int], int]:
     """({green name -> round of its latest record}, latest artifact round).
 
     Reuses the classifier's own record walk and green semantics
     (`_latest_records` / `_classify`) so the ledger can never bless a
-    name the sweep considers unproven, or vice versa.  `records` lets
-    main() pass its already-walked record map (r11 ADVICE item 2: main
-    must call THIS function, not re-derive the same thing inline)."""
+    name the sweep considers unproven, or vice versa."""
     from datafusion_umami_spark.queries import _classify, _latest_records
 
-    if records is None:
-        records = _latest_records(root)
+    records = _latest_records(root)
     green, _failed = _classify(records, oracled)
     max_round = max((rnd for _, rnd in records.values()), default=0)
     return {n: records[n][1] for n in green}, max_round
 
 
-def swept_sha_by_round(root: Path) -> dict[int, str]:
-    """round N -> sha of the tree the round-N sweep executed (the parent
-    of the newest commit adding that round's CORRECTNESS artifact).
-    Rounds whose artifact is uncommitted are absent from the map."""
-    shas: dict[int, str] = {}
-    for artifact in sorted(root.glob("CORRECTNESS_r*.json")):
-        rnd = int("".join(c for c in artifact.stem if c.isdigit()))
-        adds = _git(root, "log", "--diff-filter=A", "--format=%H", "--",
-                    artifact.name).splitlines()
-        if adds:
-            shas[rnd] = _git(root, "rev-parse", f"{adds[0]}^")
-    return shas
-
-
-def main() -> int:
-    dry = "--dry-run" in sys.argv
-    force = "--force" in sys.argv
-    repair_provenance = "--repair-provenance" in sys.argv
+def main(argv: list[str] | None = None) -> int:
+    ap = argparse.ArgumentParser(description=__doc__.splitlines()[0])
+    ap.add_argument("--dry-run", action="store_true",
+                    help="report what would change; write nothing")
+    ap.add_argument("--force", action="store_true",
+                    help="bless from an unproven tree (you vouch for "
+                         "the swept text)")
+    args = ap.parse_args(argv)
 
     from datafusion_umami_spark.fingerprint import (
         load_ledger,
@@ -195,38 +171,25 @@ def main() -> int:
         spec_fingerprint,
     )
     from datafusion_umami_spark.registry import REGISTRY
-    from datafusion_umami_spark.queries import _latest_records
 
-    records = _latest_records(ROOT)
     oracled = {n for n, s in REGISTRY.items() if s.oracle is not None}
-    greens, max_round = green_rounds(ROOT, oracled, records)
+    greens, max_round = green_rounds(ROOT, oracled)
     ledger = load_ledger()
-
     problems = preflight(ROOT)
-    tree_proven = not problems
-    if problems:
-        # r10 verdict item 4: records carrying a DRIVER-stamped spec
-        # fingerprint are blessed from the artifact alone — no working-
-        # tree consultation — so tree-identity problems only block the
-        # fp-LESS pending greens.  "Pending" means a proven tree would
-        # actually bless the name (r11 review): fp-less greens from
-        # PRE-latest rounds are skipped either way (their swept text is
-        # unrecoverable), so they must not hard-refuse artifact-only
-        # mode — refusing over them blocks the fp-carrying blessings
-        # while fixing the tree would not bless the stragglers either.
-        fpless_pending = [
-            n for n, rnd in greens.items()
-            if _record_fp(records, n) is None and n in REGISTRY
-            and rnd == max_round
-            and ledger.get(n, {}).get("round", -1) < rnd
-        ]
-        for p in problems:
-            print("REFUSING tree-based blessing —", p, file=sys.stderr)
-        if not fpless_pending:
-            print("(no fp-less pending greens — proceeding artifact-only; "
-                  "fp-carrying records bless from the artifact, others "
-                  "are already ledgered)", file=sys.stderr)
-        elif not force:
+    for p in problems:
+        print("REFUSING tree-based blessing —", p, file=sys.stderr)
+    try:
+        _artifact, swept = swept_head(ROOT)
+        no_tree = None
+    except BlessingError as e:
+        swept, no_tree = None, e  # preflight reported it already
+
+    added, updated, stale, skipped = apply_blessings(
+        ledger, greens, max_round, swept, known=set(REGISTRY),
+        current_fp=lambda n: spec_fingerprint(REGISTRY[n]),
+    )
+    if problems and (added or updated):
+        if not args.force:
             print("(fix the tree, or re-run with --force if you have "
                   "independently verified the swept text.  NOTE: until "
                   "the blessing lands, fresh latest-artifact greens stay "
@@ -234,56 +197,19 @@ def main() -> int:
                   "and do not edit fresh-green specs before re-running)",
                   file=sys.stderr)
             return 2
-        else:
-            # r10 ADVICE item 1: BlessingError-class problems (no
-            # artifact, or the newest artifact uncommitted) are
-            # NON-FORCEABLE — there is no swept tree at all, so --force
-            # has nothing to vouch for.
-            try:
-                swept_head(ROOT)
-            except BlessingError as e:
-                print("REFUSING even with --force —", e, file=sys.stderr)
-                print("(--force vouches for the swept text; it cannot "
-                      "conjure a swept tree that does not exist)",
-                      file=sys.stderr)
-                return 2
-            print("--force: blessing anyway (caller vouches for the "
-                  "swept text)", file=sys.stderr)
-            tree_proven = True
-
-    try:
-        _artifact, swept = swept_head(ROOT)
-    except BlessingError:
-        swept = None  # artifact-only mode: per-round shas still work
-    shas = swept_sha_by_round(ROOT)
-
-    added, updated, stale, skipped = apply_blessings(
-        ledger, greens, records, max_round, tree_proven, swept, shas,
-        known=set(REGISTRY), current_fp=lambda n: spec_fingerprint(REGISTRY[n]),
-    )
-
-    repaired, held, contradicted = reconcile_provenance(
-        ledger, shas,
-        record_of=lambda rnd, name: _artifact_record(ROOT, rnd, name),
-        vouch=repair_provenance,
-    )
-    if repaired:
-        print(f"WARN sha-repair: {len(repaired)} entries re-pinned to the "
-              "recomputed artifact provenance (artifact delete/re-add?)",
+        if no_tree is not None:
+            # r10 ADVICE item 1: no artifact, or the newest one
+            # uncommitted, is NON-FORCEABLE
+            print("REFUSING even with --force —", no_tree, file=sys.stderr)
+            print("(--force vouches for the swept text; it cannot "
+                  "conjure a swept tree that does not exist)",
+                  file=sys.stderr)
+            return 2
+        print("--force: blessing anyway (caller vouches for the "
+              "swept text)", file=sys.stderr)
+    elif problems:
+        print("(nothing to bless — the ledger is left as it is)",
               file=sys.stderr)
-    if held:
-        print(f"WARN sha-repair HELD for {len(held)} fp-less entries whose "
-              "re-added artifact does not re-prove their text (provenance "
-              "CI will flag them; re-run with --repair-provenance to "
-              "re-pin THESE anyway): " + ", ".join(sorted(held)[:8]),
-              file=sys.stderr)
-    if contradicted:
-        print(f"WARN sha-repair REFUSED for {len(contradicted)} entries the "
-              "re-added artifact CONTRADICTS (its record carries a "
-              "different fp, or the row is no longer a pass — the text the "
-              "ledger claims proven was never proven by this artifact; "
-              "--repair-provenance does NOT override; demote or re-sweep): "
-              + ", ".join(sorted(contradicted)[:8]), file=sys.stderr)
 
     print(f"green={len(greens)} added={len(added)} updated={len(updated)} "
           f"stale(left)={len(stale)} skipped(missing,old)={len(skipped)}")
@@ -292,152 +218,23 @@ def main() -> int:
     if skipped:
         print("WARN skipped (missing entry, pre-latest green row — will "
               "re-queue):", ", ".join(skipped))
-    if not dry:
+    if not args.dry_run and (added or updated):
         save_ledger(ledger)
         print("ledger written")
     return 0
 
 
-def _record_fp(records, name):
-    """The driver-stamped fingerprint of `name`'s latest record, if any.
-
-    Extraction + shape validation delegate to `fingerprint.record_fp`
-    (r11 ADVICE item 4) so the blessing tool and the sweep classifier
-    can never disagree on what counts as an fp-carrying record."""
-    from datafusion_umami_spark.fingerprint import record_fp
-
-    return record_fp(records[name][0]) if name in records else None
-
-
-def reconcile_provenance(ledger, shas, record_of, vouch=False):
-    """Re-pin ledger `sha` fields after an artifact delete/re-add; return
-    (repaired, held, contradicted) name lists.
-
-    r11 review finding 3: a re-added artifact re-pins its round's swept
-    sha (newest add's parent), so every older entry's stored sha
-    mismatches and the provenance CI test goes red with no repair path
-    short of hand-editing.  The round-start tool is the sanctioned
-    reconciler — but ONLY for entries the NEW artifact itself re-proves
-    (r12, r11 ADVICE item 1): an entry whose round's current artifact
-    carries a MATCHING driver-stamped fp on a PASSING row (r12 review:
-    a failed row proves nothing, whatever fp it carries) has its text
-    certified by the very file that now defines the round's provenance,
-    so re-pinning is sound.  Three other cases:
-      - fp-LESS record (or record absent): the entry was blessed from
-        the ORIGINAL swept tree and the re-added artifact is silent —
-        HELD (provenance CI fails loudly, per swept_head's own warning)
-        unless `vouch` (--repair-provenance) vouches explicitly;
-      - record fp DIFFERS from the entry's, or the row is not a pass:
-        the artifact affirmatively CONTRADICTS the ledger's claim —
-        never repaired, `vouch` does not override (r12 review: the
-        blanket vouch would launder disproven provenance while the
-        operator thinks they are vouching for fp-less strays only);
-        resolve by demoting/re-sweeping the name.
-
-    `record_of(rnd, name)` returns `name`'s record in round `rnd`'s
-    CURRENT artifact (injectable for tests)."""
-    from datafusion_umami_spark.fingerprint import record_fp
-
-    repaired, held, contradicted = [], [], []
-    for name, ent in ledger.items():
-        if shas.get(ent.get("round")) in (None, ent.get("sha")):
-            continue
-        rec = record_of(ent["round"], name)
-        fp = record_fp(rec)
-        if fp is None:
-            if vouch:
-                ledger[name]["sha"] = shas[ent["round"]]
-                repaired.append(name)
-            else:
-                held.append(name)
-        elif fp == ent.get("fp") and _is_pass(rec):
-            ledger[name]["sha"] = shas[ent["round"]]
-            repaired.append(name)
-        else:
-            contradicted.append(name)
-    return repaired, held, contradicted
-
-
-def _is_pass(rec) -> bool:
-    """A CORRECTNESS record counts as a pass: hash-green, or a rows-only
-    run for an oracle-less spec (mirrors `queries/__init__._classify`;
-    conservative — reconcile only re-pins provenance of entries that
-    were blessed green in the first place)."""
-    if not isinstance(rec, dict):
-        return False
-    return bool(rec.get("hash_match")) or (
-        rec.get("err") == "no_oracle" and rec.get("spark_rows") is not None
-    )
-
-
-def _artifact_record(root: Path, rnd: int, name: str):
-    """`name`'s record in round `rnd`'s CORRECTNESS artifact, or None."""
-    rows = _round_rows(root, rnd)
-    return rows.get(name)
-
-
-@_functools_lru_cache(maxsize=None)
-def _round_rows(root: Path, rnd: int) -> dict:
-    """All records of round `rnd`'s artifact, parsed once per round.
-
-    Walks the same glob as `_latest_records`/`swept_sha_by_round` (r12
-    review: a hardcoded zero-padded filename would silently treat a
-    differently-padded artifact's entries as absent) and caches per
-    (root, round) so reconciling ~50 entries of a re-added round parses
-    its JSON once, not once per entry."""
-    import json
-    import re
-
-    for artifact in sorted(root.glob("CORRECTNESS_r*.json")):
-        m = re.search(r"r(\d+)", artifact.name)
-        if not (m and int(m.group(1)) == rnd):
-            continue
-        try:
-            rows = json.loads(artifact.read_text())
-        except (OSError, ValueError):
-            continue
-        if isinstance(rows, dict):
-            return rows
-    return {}
-
-
-def apply_blessings(ledger, greens, records, max_round, tree_proven,
-                    swept, shas, known, current_fp):
+def apply_blessings(ledger, greens, max_round, swept, known, current_fp):
     """Mutate `ledger` per the blessing rules; return (added, updated,
     stale, skipped) name lists.  Pure decision core of main(), split out
-    so the fp-path semantics are unit-testable without a git repo:
-    `known` is the registered-name set, `current_fp(name)` the
-    working-tree fingerprint (consulted ONLY on the tree-proven,
-    fp-less path)."""
+    so the rules are unit-testable without a git repo: `known` is the
+    registered-name set, `current_fp(name)` the working-tree
+    fingerprint, `swept` the sha recorded on each blessed entry."""
     added, updated, stale, skipped = [], [], [], []
     for name, rnd in sorted(greens.items()):
         if name not in known:
             continue  # spec deleted; keep any ledger entry harmlessly
         ent = ledger.get(name)
-        rec_fp = _record_fp(records, name)
-        if rec_fp is not None:
-            # Artifact-proven path (r10 verdict item 4 / r9 ADVICE
-            # item 1): the driver stamped the fingerprint of the text it
-            # actually ran, so blessing needs neither tree identity nor
-            # the latest-round restriction — older-round greens bless
-            # too, from their own round's swept sha.
-            sha = shas.get(rnd)
-            if sha is None:
-                skipped.append(name)  # that round's artifact uncommitted
-            elif ent is None:
-                ledger[name] = {"fp": rec_fp, "round": rnd, "sha": sha}
-                added.append(name)
-            elif (ent.get("round", 0) < rnd
-                  or (ent.get("round") == rnd and ent.get("fp") != rec_fp)):
-                # second arm: the artifact outranks a tree-derived entry
-                # for the same round — record what the driver proved
-                ledger[name] = {"fp": rec_fp, "round": rnd, "sha": sha}
-                updated.append(name)
-            continue
-        if not tree_proven:
-            if ent is None or ent.get("round", 0) < rnd:
-                skipped.append(name)  # fp-less + unproven tree
-            continue
         fp = current_fp(name)
         if ent is None:
             if rnd == max_round:
