@@ -11,7 +11,11 @@ catalog table); the loader only needs the root path to change.
 
 from __future__ import annotations
 
+import math
+import os
 import re
+import stat
+import weakref
 
 from pyspark.sql import DataFrame, SparkSession
 
@@ -63,6 +67,20 @@ def parse_bytes(v: str) -> int:
     return -n if sign else n
 
 
+def _file_identity(path: str) -> tuple | None:
+    """`(realpath, mtime_ns, size)` of a plain file: any rewrite of the
+    file changes it.  None for a missing path or a directory (the 100 TB
+    layout), whose stat does not witness its leaves; callers never
+    memoize on None."""
+    try:
+        st = os.stat(path)
+    except OSError:
+        return None
+    if not stat.S_ISREG(st.st_mode):
+        return None
+    return (os.path.realpath(path), st.st_mtime_ns, st.st_size)
+
+
 def _maybe_spread(df: DataFrame, spark: SparkSession, path: str) -> DataFrame:
     """Scale-adaptive scan spread (r14, optimization guide §2.5 "input
     skew: one huge unsplittable file ... repartition immediately after
@@ -91,15 +109,11 @@ def _maybe_spread(df: DataFrame, spark: SparkSession, path: str) -> DataFrame:
     BUILD sides pay the exchange for nothing).  Results are
     partition-layout-invariant by the registry's determinism contract
     (proven by the full-registry sf0.01/sf0.1 verifies under a
-    spread-everything build)."""
-    import math
-    import os
-
-    try:
-        st = os.stat(path)
-    except OSError:
-        return df
-    if st.st_size < SPREAD_MIN_BYTES:
+    spread-everything build).  A directory table has no file identity
+    and splits on its own leaves, so it never spreads."""
+    ident = _file_identity(path)
+    size = ident[2] if ident is not None else 0
+    if size < SPREAD_MIN_BYTES:
         return df
     try:
         max_split = parse_bytes(
@@ -108,7 +122,7 @@ def _maybe_spread(df: DataFrame, spark: SparkSession, path: str) -> DataFrame:
     except Exception:
         max_split = 128 * 1024 * 1024
     target = spark.sparkContext.defaultParallelism
-    if math.ceil(st.st_size / max(max_split, 1)) >= target or target <= 1:
+    if math.ceil(size / max(max_split, 1)) >= target or target <= 1:
         return df
     return df.repartition(target, df[df.columns[0]])
 
@@ -182,24 +196,14 @@ def _schema_conf_key(spark: SparkSession) -> tuple:
     return tuple(vals)
 
 
-def _cached_schema(spark: SparkSession, path: str, conf_key: tuple = ()):
+def _cached_schema(spark: SparkSession, path: str):
     """Inferred parquet schema for a single-file `path`, memoized on the
-    file's identity; None when `path` is not a plain file (caller should
-    fall back to normal inference)."""
-    import os
-    import stat as statmod
-
-    try:
-        st = os.stat(path)
-    except OSError:
+    file's identity and the session's schema confs; None when `path` is
+    not a plain file (caller should fall back to normal inference)."""
+    ident = _file_identity(path)
+    if ident is None:
         return None
-    if not statmod.S_ISREG(st.st_mode):
-        return None
-    key = (
-        (os.path.realpath(path), st.st_mtime_ns, st.st_size)
-        + _schema_conf_key(spark)
-        + conf_key
-    )
+    key = ident + _schema_conf_key(spark)
     sch = _SCHEMA_CACHE.get(key)
     if sch is None:
         sch = spark.read.parquet(path).schema
@@ -211,9 +215,7 @@ def events_ts_is_ns(spark: SparkSession, sf_dir: str) -> bool:
     """True when events.parquet stores ts as timestamp[ns] (read back as
     LongType under nanosAsLong) rather than native timestamp[us]."""
     spark.conf.set("spark.sql.legacy.parquet.nanosAsLong", "true")
-    sch = _cached_schema(
-        spark, f"{sf_dir}/events.parquet", ("nanosAsLong=true",)
-    )
+    sch = _cached_schema(spark, f"{sf_dir}/events.parquet")
     if sch is None:
         df = spark.read.parquet(f"{sf_dir}/events.parquet")
         return dict(df.dtypes)["ts"] == "bigint"
@@ -232,14 +234,12 @@ def table(
     this scan is measured to dominate the exchange cost."""
     if name not in TABLE_NAMES:
         raise KeyError(f"unknown table {name!r}; expected one of {TABLE_NAMES}")
-    conf_key: tuple = ()
     if name == "events":
         # Runtime-set (not only in the session factory) so the loader also
         # works under a driver-owned SparkSession we didn't configure.
         spark.conf.set("spark.sql.legacy.parquet.nanosAsLong", "true")
-        conf_key = ("nanosAsLong=true",)
     path = f"{sf_dir}/{name}.parquet"
-    sch = _cached_schema(spark, path, conf_key)
+    sch = _cached_schema(spark, path)
     reader = spark.read.schema(sch) if sch is not None else spark.read
     df = reader.parquet(path)
     if name == "events":
@@ -249,71 +249,31 @@ def table(
     return df
 
 
-def load_tables(spark: SparkSession, sf_dir: str) -> dict[str, DataFrame]:
-    """Load every table; returns {name: DataFrame}."""
-    return {name: table(spark, sf_dir, name) for name in TABLE_NAMES}
-
-
-# View-registration memo (r14 guide §1 fixed costs).  Every SQL-text
-# spec calls register_views inside its timed window; after the schema
-# cache that is still ~0.2 s of py4j/catalog round-trips per call (10
-# tables x createOrReplaceTempView), re-creating views that are
-# BYTE-IDENTICAL to the ones already registered.  The memo records what
-# the last registration installed — session object, sf_dir, spread set,
-# and each file's (realpath, mtime_ns, size) — and skips the re-install
-# when nothing changed.  CATALOG METADATA only: the views stay lazy, no
-# data or results are held, and any file rewrite / sf_dir switch /
-# spread change misses the key and re-registers.  The one hazard is an
-# EXTERNAL createOrReplaceTempView over one of our 10 names (test
-# suites do this with micro-data): tests/conftest.py invalidates the
-# memo around every test, and invalidate_view_memo() is the public
-# escape hatch.
-_VIEW_MEMO: dict[int, tuple] = {}
+# View install record (r14 guide §1 fixed costs).  Every SQL-text spec
+# calls register_views inside its timed window, and each
+# createOrReplaceTempView is a py4j/catalog round-trip.  The record is
+# weakly keyed by the one session it describes and holds, per view, the
+# key of what was installed there: the file's identity, the view's
+# effective spread flag (with maxPartitionBytes, which gates the
+# repartition, when the flag is set) and the schema confs.
+# register_views re-creates exactly the views whose key changed, so a
+# query that spreads lineitem after one that does not reloads one view,
+# not ten (out-of-core bench at sf0.1, 4 vCPU: register_views
+# 0.25-0.47 -> 0.05-0.07 s per pass).  A directory or missing file has no
+# identity and is re-created on every call, and a call from another
+# session object starts a fresh record.  CATALOG METADATA only: the
+# views stay lazy and no data or results are held.  The one hazard is an
+# EXTERNAL createOrReplaceTempView over one of our 10 names (test suites
+# do this with micro-data): tests/conftest.py invalidates the record
+# around every test, and invalidate_view_memo() is the public escape
+# hatch.
+_INSTALLED: weakref.WeakKeyDictionary = weakref.WeakKeyDictionary()
 
 
 def invalidate_view_memo() -> None:
-    """Forget the last register_views installation (call after
+    """Forget every view register_views installed (call after
     registering a temp view that shadows a TABLE_NAMES name)."""
-    _VIEW_MEMO.clear()
-
-
-def _view_memo_key(
-    spark: SparkSession, sf_dir: str, spread: tuple
-) -> tuple | None:
-    """None ⇒ non-memoizable (always re-register).  The key must witness
-    every input that table()/_maybe_spread bake into the registered
-    view's LOGICAL PLAN at install time (r14 ADVICE):
-    - maxPartitionBytes gates the spread repartition — an in-session
-      change must miss the memo, the same PLAN_SHAPE_CONFS discipline
-      as the shared-checkpoint cache (operators/materialize.py);
-    - the schema confs decide what the footer-schema cache inferred;
-    - a non-regular file (the 100 TB directory-table layout) has a stat
-      that does not witness its leaves — bypass, mirroring
-      _cached_schema's S_ISREG skip."""
-    import os
-    import stat as statmod
-
-    stats = []
-    for name in TABLE_NAMES:
-        try:
-            st = os.stat(f"{sf_dir}/{name}.parquet")
-        except OSError:
-            stats.append(None)
-            continue
-        if not statmod.S_ISREG(st.st_mode):
-            return None
-        stats.append((st.st_mtime_ns, st.st_size))
-    try:
-        max_split = str(spark.conf.get("spark.sql.files.maxPartitionBytes"))
-    except Exception:
-        max_split = "?"
-    return (
-        os.path.realpath(sf_dir),
-        frozenset(n for n in spread),
-        tuple(stats),
-        max_split,
-        _schema_conf_key(spark),
-    )
+    _INSTALLED.clear()
 
 
 def register_views(
@@ -324,24 +284,25 @@ def register_views(
     Mirrors the reference's `SessionContext::register_parquet` flow; views
     are lazy — no data is read until a query over them executes.
     `spread` names the tables whose view should opt into the
-    scale-adaptive scan spread for the CALLING query (the choice never
-    leaks into the next query: a different spread set misses the memo
-    key and re-registers)."""
-    key = _view_memo_key(spark, sf_dir, spread)
-    memo_on = key is not None  # None ⇒ non-memoizable layout
-    # keyed on id() of the live session object; the stored weakref must
-    # still point at the SAME object (a recycled id or a new session
-    # misses, and a miss only ever re-registers — the safe direction).
-    if memo_on:
-        hit = _VIEW_MEMO.get(id(spark))
-        if hit is not None and hit[0] == key and hit[1]() is spark:
-            return
+    scale-adaptive scan spread for the CALLING query.  Only views whose
+    key (see the install record above) changed since the last call are
+    re-created, so the choice never leaks into the next query: a view
+    whose spread flag flips is re-created, the others are kept."""
+    installed = _INSTALLED.get(spark)
+    if installed is None:  # one live installation at a time
+        _INSTALLED.clear()
+        installed = _INSTALLED[spark] = {}
+    conf_key = _schema_conf_key(spark)
     for name in TABLE_NAMES:
-        table(spark, sf_dir, name, spread=name in spread).createOrReplaceTempView(
-            name
+        ident = _file_identity(f"{sf_dir}/{name}.parquet")
+        spread_on = name in spread and name in FACT_TABLES
+        max_split = (
+            str(spark.conf.get("spark.sql.files.maxPartitionBytes"))
+            if spread_on
+            else None
         )
-    if memo_on:
-        import weakref
-
-        _VIEW_MEMO.clear()  # one live installation at a time
-        _VIEW_MEMO[id(spark)] = (key, weakref.ref(spark))
+        key = (ident, spread_on, max_split, conf_key)
+        if ident is not None and installed.get(name) == key:
+            continue
+        table(spark, sf_dir, name, spread=spread_on).createOrReplaceTempView(name)
+        installed[name] = key

@@ -31,11 +31,13 @@ def sf_dir() -> str:
 
 @pytest.fixture(autouse=True)
 def _fresh_view_memo():
-    """The register_views memo (tables.py) assumes nobody else touched
-    its 10 view names since the last install.  Tests DO shadow those
-    names with micro-data views (test_fuzz), so every test starts and
-    ends with the memo invalidated — within one test the memo only
-    sees its own registrations."""
+    """register_views (tables.py) keeps a view whose key (file
+    identity, spread flag, confs) is unchanged since it installed it,
+    and re-creates only the others; that assumes nobody else touched its
+    10 view names in between.  Tests DO shadow those names with
+    micro-data views (test_fuzz), so every test starts and ends with the
+    install record invalidated — within one test the record only sees
+    its own registrations."""
     from datafusion_umami_spark.tables import invalidate_view_memo
 
     invalidate_view_memo()
