@@ -6,14 +6,10 @@ from datafusion_umami_spark.functions.array_extra import (
     array_distance,
     array_replace_all,
     array_resize,
-    cosine_similarity,
-    dot_product,
 )
 
 __all__ = [
     "array_distance",
     "array_replace_all",
     "array_resize",
-    "cosine_similarity",
-    "dot_product",
 ]

@@ -24,21 +24,6 @@ def array_distance(a: Column | str, b: Column | str) -> Column:
     return F.sqrt(F.aggregate(diff2, F.lit(0.0), lambda acc, v: acc + v))
 
 
-def dot_product(a: Column | str, b: Column | str) -> Column:
-    """Inner product via zip_with + aggregate (JVM-side)."""
-    prods = F.zip_with(_c(a), _c(b), lambda x, y: x * y)
-    return F.aggregate(prods, F.lit(0.0), lambda acc, v: acc + v)
-
-
-def cosine_similarity(a: Column | str, b: Column | str) -> Column:
-    """Cosine similarity = dot(a,b) / (||a|| * ||b||)."""
-    a, b = _c(a), _c(b)
-    norm = lambda v: F.sqrt(F.aggregate(  # noqa: E731
-        F.transform(v, lambda x: x * x), F.lit(0.0), lambda acc, x: acc + x
-    ))
-    return dot_product(a, b) / (norm(a) * norm(b))
-
-
 def array_resize(arr: Column | str, new_size: int, fill: object = None) -> Column:
     """Resize to `new_size`, truncating or padding with `fill`
     (reference functions-nested/src/resize.rs)."""

@@ -13,26 +13,24 @@ joins/hash_join.rs:328) where both inputs are already hash-distributed.
 
 from __future__ import annotations
 
-import hashlib
+import os
 import shutil
 
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from datafusion_umami_spark.registry import register
+from datafusion_umami_spark.streaming.runner import scratch_root
 from datafusion_umami_spark.tables import table
-
-_WAREHOUSE = "/tmp/datafusion_umami_spark_bucketed"
 
 
 def _bucketize(spark: SparkSession, sf_dir: str) -> None:
-    h = hashlib.md5(sf_dir.encode()).hexdigest()[:8]
     for name, src_cols, key in (
         ("li_bucketed", ["l_orderkey", "l_extendedprice", "l_discount"], "l_orderkey"),
         ("ord_bucketed", ["o_orderkey", "o_orderpriority"], "o_orderkey"),
     ):
         spark.sql(f"DROP TABLE IF EXISTS {name}")
-        path = f"{_WAREHOUSE}/{h}/{name}"
+        path = os.path.join(scratch_root(spark), "bucketed", name)
         shutil.rmtree(path, ignore_errors=True)
         src = "lineitem" if name == "li_bucketed" else "orders"
         (

@@ -25,25 +25,21 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from datafusion_umami_spark.registry import register, register_sql
+from datafusion_umami_spark.streaming.runner import scratch_root
 from datafusion_umami_spark.tables import TABLE_NAMES, register_views
 
 from datafusion_umami_spark.queries.hashing import DUCK_H64, SPARK_H64
 
 
 def _fresh_scratch_location(spark: SparkSession, table: str) -> None:
-    """Prepare `dus_scratch.<table>` for re-creation: drop the catalog
-    entry AND purge its warehouse location. The in-memory session
-    catalog forgets the table across processes while its files persist
-    (and the warehouse dir is cwd-relative), so CREATE TABLE would
-    otherwise fail with LOCATION_ALREADY_EXISTS. DROP-on-exit is not an
+    """Prepare `dus_scratch.<table>` for re-creation.  The database
+    lives under the application's scratch root, not the warehouse, so
+    its tables go when the process exits; a rerun in the same
+    application drops the table first.  DROP-after-use is not an
     option: Spark uncaches/invalidates plans of dropped tables."""
-    import shutil
-    from urllib.parse import unquote, urlparse
-
-    spark.sql("CREATE DATABASE IF NOT EXISTS dus_scratch")
+    location = f"{scratch_root(spark)}/dus_scratch.db"
+    spark.sql(f"CREATE DATABASE IF NOT EXISTS dus_scratch LOCATION '{location}'")
     spark.sql(f"DROP TABLE IF EXISTS dus_scratch.{table}")
-    wh = unquote(urlparse(spark.conf.get("spark.sql.warehouse.dir")).path)
-    shutil.rmtree(f"{wh}/dus_scratch.db/{table}", ignore_errors=True)
 
 
 

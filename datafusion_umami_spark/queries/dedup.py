@@ -8,11 +8,8 @@ scales: candidate generation is always an EQUI-join (on shingle, band
 signature, simhash band, or LSH hyperplane bucket) — never an all-pairs
 cross join — which is the property that keeps these runnable at 100 TB.
 Expensive verification (hamming / cosine) only ever touches candidate
-pairs produced by an equi-join.
-
-Portable 60-bit hash (same convention as textanalysis.py):
-  spark : CAST(conv(substr(md5(s), 1, 15), 16, 10) AS BIGINT)
-  duckdb: CAST(concat('0x', substr(md5(s), 1, 15)) AS BIGINT)
+pairs produced by an equi-join.  Hash-driven selection uses the portable
+60-bit hash of queries/hashing.py.
 """
 
 from __future__ import annotations
@@ -22,13 +19,13 @@ from pyspark.sql import functions as F
 
 from datafusion_umami_spark.registry import register, register_sql
 
-
-def _sp_h(s: str) -> str:
-    return f"CAST(conv(substr(md5({s}), 1, 15), 16, 10) AS BIGINT)"
+from datafusion_umami_spark.queries.hashing import DUCK_H64, SPARK_H64
 
 
 def _du_h(s: str) -> str:
-    return f"CAST(concat('0x', substr(md5({s}), 1, 15)) AS BIGINT)"
+    # Two @register oracles below call this by name: a DataFrame spec's
+    # decorated source is its fingerprint, so the call spelling stays.
+    return DUCK_H64.format(s=s)
 
 
 # --- exact dedup: hash-groupBy --------------------------------------------
@@ -162,7 +159,7 @@ _SP_MINHASH_SIGS = f"""
     hashes AS (
       -- no DISTINCT: MIN over duplicate shingles equals MIN over the set,
       -- so the dedup shuffle would be pure waste
-      SELECT doc_id, {_sp_h("shingle")} % {_P31} AS h
+      SELECT doc_id, {SPARK_H64.format(s="shingle")} % {_P31} AS h
       FROM shingles)
     SELECT doc_id, array({_SP_MH}) AS mhs
     FROM hashes GROUP BY doc_id
@@ -217,7 +214,7 @@ def _minhash_pairs_df(spark: SparkSession, sf_dir: str) -> DataFrame:
 _DU_MINHASH_PAIRS = f"""
     WITH shingles AS ({_DU_SHINGLES}),
     hashes AS (
-      SELECT doc_id, {_du_h("shingle")} % {_P31} AS h
+      SELECT doc_id, {DUCK_H64.format(s="shingle")} % {_P31} AS h
       FROM shingles),
     sigs AS (
       SELECT doc_id, [{_DU_MH}] AS mhs
@@ -269,7 +266,7 @@ _SP_SIMHASH_SIG = f"""
       SELECT DISTINCT doc_id, word
       FROM (SELECT doc_id, explode(split(trim(text), '\\\\s+')) AS word
             FROM documents)),
-    hashes AS (SELECT doc_id, {_sp_h("word")} AS h FROM w),
+    hashes AS (SELECT doc_id, {SPARK_H64.format(s="word")} AS h FROM w),
     bits AS (
       SELECT doc_id, b,
              SUM(CASE WHEN (shiftright(h, b) & 1) = 1 THEN 1 ELSE -1 END) AS vote
@@ -377,7 +374,7 @@ _SP_COSINE_BUCKETS = f"""
       FROM e LATERAL VIEW posexplode(v) t AS pos, x),
     planes AS (
       SELECT band, plane, d,
-             CASE WHEN {_sp_h("concat(CAST(band AS STRING), ':', CAST(plane AS STRING), ':', CAST(d AS STRING))")} % 2 = 0
+             CASE WHEN {SPARK_H64.format(s="concat(CAST(band AS STRING), ':', CAST(plane AS STRING), ':', CAST(d AS STRING))")} % 2 = 0
                   THEN 1 ELSE -1 END AS sgn
       FROM (SELECT explode(sequence(0, 2)) AS band)
       LATERAL VIEW explode(sequence(0, 3)) pt AS plane

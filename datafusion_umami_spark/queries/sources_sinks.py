@@ -26,7 +26,6 @@ source; documented as the low-priority gap SURVEY §2.1 calls out.
 
 from __future__ import annotations
 
-import hashlib
 import os
 import shutil
 
@@ -34,15 +33,15 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from datafusion_umami_spark.registry import register
+from datafusion_umami_spark.streaming.runner import scratch_root
 from datafusion_umami_spark.tables import table
-
-_SINK_ROOT = os.environ.get("SPARK_GRAFT_SINK_DIR", "/tmp/datafusion_umami_spark_sinks")
 
 
 def _sink_dir(sf_dir: str, name: str) -> str:
-    """Deterministic per-(scale-factor, query) scratch path."""
-    h = hashlib.md5(sf_dir.encode()).hexdigest()[:8]
-    return f"{_SINK_ROOT}/{h}/{name}"
+    """Deterministic per-(scale-factor, query) path under the active
+    application's scratch root."""
+    sf_tag = os.path.basename(os.path.normpath(sf_dir)) or "sf"
+    return os.path.join(scratch_root(SparkSession.active()), "sinks", sf_tag, name)
 
 
 # --- CSV: write with header → read with explicit schema → aggregate --------

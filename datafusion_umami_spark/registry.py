@@ -83,26 +83,25 @@ def register(
     oracle: str | None = None,
     tags: tuple[str, ...] = (),
     bench: bool = False,
-    module: str | None = None,
     discrimination: str | None = None,
 ) -> Callable[[QueryFn], QueryFn]:
     """Decorator: add a query to the registry.
 
-    `module` may be passed explicitly (``module=__name__``) by helpers
-    not in `_REGISTRAR_MODULES`; otherwise the stack walk resolves it.
-    Either way the result must be a `queries/` module — the sweep-order
-    tests separate tranche additions from the legacy backlog by
-    `spec.module`, so a silent mis-attribution (r7 ADVICE item 1) would
-    corrupt the sweep-order accounting.  Fail loudly instead.
+    `spec.module` is the nearest caller outside `_REGISTRAR_MODULES`,
+    found by walking the stack, and must be a `queries/` module — the
+    sweep-order tests separate tranche additions from the legacy backlog
+    by `spec.module`, so a silent mis-attribution (r7 ADVICE item 1)
+    would corrupt the sweep-order accounting.  Fail loudly instead.
     """
 
-    module = module or _registering_module()
+    module = _registering_module()
     if module != "datafusion_umami_spark.queries" and not module.startswith(
         "datafusion_umami_spark.queries."
     ):
         raise ValueError(
             f"query {name!r} attributed to non-queries module {module!r}; "
-            "pass module=__name__ through your registration helper"
+            "a registration helper outside queries/ must be listed in "
+            "registry._REGISTRAR_MODULES"
         )
 
     def deco(fn: QueryFn) -> QueryFn:
@@ -123,7 +122,6 @@ def register_sql(
     oracle: str | None = None,
     tags: tuple[str, ...] = (),
     bench: bool = False,
-    module: str | None = None,
     discrimination: str | None = None,
     spread_tables: tuple[str, ...] = (),
 ) -> None:
@@ -151,7 +149,6 @@ def register_sql(
         oracle if oracle is not None else spark_sql,
         tags=tags,
         bench=bench,
-        module=module,
         discrimination=discrimination,
     )(fn)
 

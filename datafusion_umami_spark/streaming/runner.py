@@ -11,6 +11,7 @@ Structured Streaming design point.
 
 from __future__ import annotations
 
+import atexit
 import os
 import shutil
 import tempfile
@@ -22,22 +23,16 @@ from datafusion_umami_spark.tables import parse_bytes
 
 
 def _scratch_base() -> str:
-    """Base directory for streaming scratch (checkpoints, upsert state).
+    """Where every scratch root lives: `SPARK_GRAFT_STREAM_SCRATCH` when
+    set, else /dev/shm when it has 2 GiB free, else the temp dir.
 
-    r14 (guide §1/§5): the cascade's drain time was DOMINATED by
-    state-store commit fsyncs against the checkpoint dir (~200 ms per
-    store commit on this host's ext4 /tmp; 2 stateful ops x 32
-    partitions x 2 microbatches).  These checkpoints carry NO recovery
-    value across processes — scratch_dir deliberately CLEARS at start
-    (see below) — so they are pure scratch and prefer tmpfs
-    (/dev/shm) when present AND comfortably free (r14 ADVICE: tmpfs
-    defaults to ~50% RAM, so on a small-memory host a larger state
-    store must fall back to disk rather than ENOSPC).  A real
-    deployment points checkpointLocation at durable storage instead;
-    override with SPARK_GRAFT_STREAM_SCRATCH.  Note: scratch trees from
-    pre-r14 runs may linger under /tmp (and under /dev/shm after a
-    crash) until the next same-app run clears them — both live under
-    dus_scratch_<uid> so a manual sweep is one rm -rf."""
+    Scratch (streaming checkpoints, sink roundtrips, bucketed tables,
+    DDL tables) carries no value past the application that wrote it, so
+    tmpfs is preferred: streaming drain time is dominated by state-store
+    commit fsyncs, ~200 ms each on an ext4 /tmp.  The 2 GiB floor keeps
+    a larger state store on a small-memory host from hitting ENOSPC on
+    tmpfs (which defaults to half of RAM).  A deployment that wants
+    durable checkpoints points the variable at durable storage."""
     env = os.environ.get("SPARK_GRAFT_STREAM_SCRATCH")
     if env:
         return env
@@ -50,24 +45,40 @@ def _scratch_base() -> str:
     return tempfile.gettempdir()
 
 
-def scratch_dir(spark: SparkSession, *parts: str) -> str:
-    """Deterministic WITHIN a Spark application, isolated ACROSS
-    processes and users: reruns in one session overwrite (no
-    per-invocation tempdir leak) while a concurrent sweep/pytest pair
-    cannot rmtree each other's in-flight streaming checkpoints, and a
-    shared /tmp never hits another user's 0755 parent.  Clearing (not
-    reusing) at start is load-bearing — a stale checkpoint would make
-    a restarted query skip already-committed source files while the
-    fresh sink starts empty, silently losing rows."""
-    root = os.path.join(
-        _scratch_base(),
-        f"dus_scratch_{os.getuid()}",
-        spark.sparkContext.applicationId,
-        *parts,
-    )
-    shutil.rmtree(root, ignore_errors=True)
-    os.makedirs(root, exist_ok=True)
+_ROOTS: dict[str, str] = {}  # applicationId -> its scratch root
+
+
+def scratch_root(spark: SparkSession) -> str:
+    """The one directory every file a query writes goes under:
+    `<_scratch_base()>/dus_scratch_<uid>/<applicationId>`.
+
+    Per user, so a shared /tmp never hits another user's 0755 parent;
+    per application, so concurrent processes never remove each other's
+    in-flight files.  Created on first use and removed when the process
+    exits; the base is resolved once per application, so a checkpoint
+    never moves between tmpfs and disk mid-run."""
+    app = spark.sparkContext.applicationId
+    root = _ROOTS.get(app)
+    if root is None:
+        root = os.path.join(
+            _scratch_base(), f"dus_scratch_{os.getuid()}", app
+        )
+        os.makedirs(root, exist_ok=True)
+        atexit.register(shutil.rmtree, root, ignore_errors=True)
+        _ROOTS[app] = root
     return root
+
+
+def scratch_dir(spark: SparkSession, *parts: str) -> str:
+    """`scratch_root/<parts>`, cleared at start: reruns in one
+    application overwrite rather than accumulate.  Clearing (not
+    reusing) is load-bearing: a stale checkpoint would make a restarted
+    query skip already-committed source files while the fresh sink
+    starts empty, silently losing rows."""
+    path = os.path.join(scratch_root(spark), *parts)
+    shutil.rmtree(path, ignore_errors=True)
+    os.makedirs(path, exist_ok=True)
+    return path
 
 # --- adaptive state-partition coalescing (r15, guide §2.2/§6) -------------
 # Stateful streaming is denied AQE partition coalescing: the state

@@ -4,10 +4,8 @@ Usage: PYTHONPATH=. python tools/dump_plan_files.py <outdir> <suffix> [names...]
 
 Writes <outdir>/<query>_<suffix>.txt for each bench query (or the given
 subset) using the SAME session configuration as bench.py (session.get_spark),
-so the captured plan is the plan the bench actually times.  Unlike
-tools/dump_plans.py (PLANS.md documentation artifact, local[8] fixed conf),
-these files are the optimization-round evidence: plan shape before/after a
-change, expression ids elided for diffability.
+so the captured plan is the plan the bench actually times: plan shape
+before/after a change, expression ids elided for diffability.
 """
 
 from __future__ import annotations
