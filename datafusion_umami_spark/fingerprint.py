@@ -84,6 +84,9 @@ def spec_fingerprint(spec) -> str:  # type: ignore[no-untyped-def]
     `register_split_sql` specs, whose shape is `fn._sql_shape`.  A
     `@register` DataFrame spec's shape is its callable's source, so even
     a comment-only edit to its body demotes it: conservative by design.
+    That source includes the decorator, so a new `discrimination=`
+    probe, tag or `bench=` on an `@register` spec demotes it too; on a
+    SQL spec those arguments leave the fingerprint unchanged.
     """
     shape = getattr(spec.fn, "_sql_shape", None)
     if shape is not None:

@@ -16,17 +16,8 @@ shuffle equi-join on u → distinct.  All JVM-side; the only driver-side
 control is the fixpoint loop itself (same structure as
 operators/recursive.py, the WITH RECURSIVE analog).
 
-Each round's edge set is eagerly localCheckpoint()ed: the next round and
-the convergence subtract() read stored blocks, and `.toDF()` re-keys the
-attribute ids (Spark 4.1 optimizer bug: re-joining a checkpointed frame
-against subtract() output under original ids → "key not found").
-
-Superseded rounds' checkpoints are unpersisted as soon as the next
-round's checkpoint materializes — otherwise block-manager storage grows
-with iteration count for the life of the session (on a long-lived
-cluster driver that is a leak, not a nuisance).  The final label frame
-is itself checkpointed so every intermediate block can be freed before
-returning; the caller holds exactly one pinned O(|V|) frame.
+Each round's edge set is checkpointed, and its row count comes from the
+same job (operators/materialize.py states the checkpoint hygiene).
 """
 
 from __future__ import annotations
@@ -34,24 +25,7 @@ from __future__ import annotations
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
-
-def _free_checkpoint(ck: DataFrame, blocking: bool = False) -> None:
-    """Drop the stored blocks behind a frame returned by localCheckpoint.
-
-    The frame's analyzed plan is a LogicalRDD wrapping the checkpointed
-    RDD; unpersisting that RDD releases its block-manager storage.
-    Best-effort: on any JVM-interface surprise the blocks simply live
-    until session end, which was the old behavior.
-
-    `blocking=True` waits for eviction to complete — the bench runner
-    needs it so block eviction cannot overlap a timed iteration (the
-    default async unpersist is right for the fixpoint loops, where the
-    next round's work hides the eviction latency).
-    """
-    try:
-        ck._jdf.queryExecution().analyzed().rdd().unpersist(blocking)
-    except Exception:
-        pass
+from datafusion_umami_spark.operators.materialize import checkpoint, free
 
 
 def connected_components(
@@ -67,27 +41,18 @@ def connected_components(
     `stats` (optional dict) receives {"iterations": int,
     "max_edges": int} — test hook proving per-round work stays O(|E|).
     """
-    e_ck = (
+    e, e_count = checkpoint(
         edges.toDF("a", "b")
         .where("a <> b")
         .selectExpr("least(a, b) AS a", "greatest(a, b) AS b")
         .distinct()
-        .localCheckpoint(eager=True)
     )
-    e = e_ck.toDF("a", "b")
-    nodes_ck = (
-        e.selectExpr("a AS n")
-        .union(e.selectExpr("b AS n"))
-        .distinct()
-        .localCheckpoint(eager=True)
+    nodes, _ = checkpoint(
+        e.selectExpr("a AS n").union(e.selectExpr("b AS n")).distinct()
     )
-    nodes = nodes_ck.toDF("n")
-    e_count = e.count()
     max_edges = e_count
-    iterations = 0
 
-    for _ in range(max_iterations):
-        iterations += 1
+    for iterations in range(1, max_iterations + 1):
         # -- large-star: attach each strictly-larger neighbor of u to
         #    m(u) = min(Γ(u) ∪ {u})
         sym = e.selectExpr("a AS u", "b AS v").union(e.selectExpr("b AS u", "a AS v"))
@@ -107,23 +72,20 @@ def connected_components(
         #    neighbor of u (and u itself) to m(u) = min(Γ⁻(u))
         ori = ls.selectExpr("greatest(a, b) AS u", "least(a, b) AS v")
         mins2 = ori.groupBy("u").agg(F.min("v").alias("m"))
-        ss_ck = (
+        ss, ss_count = checkpoint(
             ori.join(mins2, "u")
             .selectExpr("v AS x", "m")
             .union(mins2.selectExpr("u AS x", "m"))
             .where("x <> m")
             .selectExpr("m AS a", "x AS b")  # m = min ⇒ already ordered
             .distinct()
-            .localCheckpoint(eager=True)
         )
-        ss = ss_ck.toDF("a", "b")
-        ss_count = ss.count()
         max_edges = max(max_edges, ss_count)
         # set equality with ONE subtract: both sides are distinct, so
         # equal cardinality + empty one-way difference ⇒ equal sets
         converged = ss_count == e_count and ss.subtract(e).isEmpty()
-        _free_checkpoint(e_ck)  # last read of the old round was that subtract
-        e_ck, e, e_count = ss_ck, ss, ss_count
+        free(e)  # last read of the old round was that subtract
+        e, e_count = ss, ss_count
         if converged:
             break
     else:
@@ -136,12 +98,11 @@ def connected_components(
     # Fixpoint is a forest of stars centered on each component's min:
     # leaf label = its center, center label = itself.  Checkpoint the
     # O(|V|) label frame so every working block can be freed now.
-    labels = (
+    labels, _ = checkpoint(
         nodes.join(e.selectExpr("b AS n", "a AS c"), "n", "left")
         .groupBy("n")
         .agg(F.min(F.coalesce(F.col("c"), F.col("n"))).alias("cluster_id"))
-        .localCheckpoint(eager=True)
     )
-    _free_checkpoint(e_ck)
-    _free_checkpoint(nodes_ck)
-    return labels.toDF("n", "cluster_id")
+    free(e)
+    free(nodes)
+    return labels

@@ -7,10 +7,22 @@ triangle count executed its `pairs` CTE 32 times; minhash-LSH computed
 the signature matrix 4 times.  Exchange reuse never rescues these
 because the consuming branches differ above the exchange.
 
-`materialize_once` eagerly localCheckpoints a DataFrame so every
-downstream reference reads ONE materialization, freeing the previous
-checkpoint registered under the same key (caller-holds-one hygiene, as
-operators/connected_components.py / pagerank.py).
+Every checkpoint in the package is taken by `checkpoint` and freed by
+`free`; the hygiene, stated once:
+- `checkpoint` takes a lazy `localCheckpoint` and counts its RDD: ONE
+  job (after any shuffle stages the plan runs first) stores the blocks
+  and yields the row count; an eager checkpoint plus `count`/`isEmpty`
+  pays a second job.  The frame it returns has fresh attribute ids
+  (`toDF`: the Spark 4.1 "key not found" gotcha, CLAUDE.md).
+- Lineage is truncated, so the blocks are the only copy: free one only
+  once no live frame reads it.  Fixpoint loops free a superseded round
+  once the next round has materialized, so storage stays O(one round)
+  on a long-lived driver, not O(iterations).  What a loop returns (CC's
+  labels, pagerank's state, recursive_cte's union of delta checkpoints)
+  is not in `_LIVE`: it stays pinned until the driver GC collects it.
+- `free` is asynchronous (the next round hides the eviction);
+  `blocking=True` waits, so a timed run that follows never overlaps
+  eviction (bench.py calls `release_all(blocking=True)`).
 
 100 TB rule of thumb encoded here: only materialize REDUCED
 intermediates — aggregates, distinct edge sets, per-doc signatures,
@@ -25,8 +37,7 @@ from __future__ import annotations
 
 from pyspark.sql import DataFrame
 
-from datafusion_umami_spark.operators.connected_components import _free_checkpoint
-from datafusion_umami_spark.tables import FACT_TABLES
+from datafusion_umami_spark.tables import FACT_TABLES, conf_values
 
 _LIVE: dict[str, DataFrame] = {}
 
@@ -44,6 +55,28 @@ PLAN_SHAPE_CONFS = (
     "spark.sql.adaptive.enabled",
     "spark.sql.files.maxPartitionBytes",
 )
+
+
+def checkpoint(df: DataFrame, *names: str) -> tuple[DataFrame, int]:
+    """Materialize and count `df` with one action; return (frame, rows).
+    The frame reads the stored blocks under fresh attribute ids, renamed
+    to `names` when given."""
+    ck = df.localCheckpoint(eager=False)
+    rows = ck._jdf.queryExecution().analyzed().rdd().count()
+    return ck.toDF(*(names or ck.columns)), rows
+
+
+def free(frame: DataFrame, blocking: bool = False) -> None:
+    """Unpersist the checkpoint behind a frame `checkpoint` returned: the
+    LogicalRDD that is the one leaf of its analyzed plan.  Best-effort: any
+    other frame (several leaves, no RDD) is left alone, and on any
+    JVM-interface surprise the blocks simply live until session end."""
+    try:
+        leaves = frame._jdf.queryExecution().analyzed().collectLeaves()
+        (leaf,) = [leaves.apply(i) for i in range(leaves.size())]
+        leaf.rdd().unpersist(blocking)
+    except Exception:
+        pass
 
 
 def fact_scan_counts(df: DataFrame) -> dict[str, int]:
@@ -78,14 +111,12 @@ def release(key: str, blocking: bool = False) -> None:
     ever materialized across the session)."""
     prev = _LIVE.pop(key, None)
     if prev is not None:
-        _free_checkpoint(prev, blocking=blocking)
+        free(prev, blocking=blocking)
 
 
 def release_all(blocking: bool = False) -> None:
     """Free every held checkpoint (sequential runners call this between
-    queries; the next build simply re-materializes what it needs).
-    `blocking=True` waits for eviction so a timed run that follows pays
-    the full build cost with no eviction overlap (bench.py)."""
+    queries; the next build simply re-materializes what it needs)."""
     for key in list(_LIVE):
         release(key, blocking=blocking)
 
@@ -120,39 +151,25 @@ def materialize_view_shared(spark, key: str, view: str, build) -> DataFrame:
     OLD config — the hostile-config parity gate exists precisely to
     re-execute the build under the hostile shape, and a config-blind
     cache would make it vacuous (round-6 self-review finding)."""
-    def conf(key: str) -> str:
-        # no fallback arg: Spark 4.1 type-validates a provided default
-        # (an empty-string fallback raises INVALID_CONF_VALUE on byte
-        # confs); the no-arg form resolves the conf's own default.
-        try:
-            return str(spark.conf.get(key))
-        except Exception:
-            return "?"
-
     fp = ":".join(
-        (spark.sparkContext.applicationId, *(conf(k) for k in PLAN_SHAPE_CONFS))
+        (spark.sparkContext.applicationId, *conf_values(spark, PLAN_SHAPE_CONFS))
     )
     full_key = f"{key}@{fp}"
     df = _LIVE.get(full_key)
     if df is None:
-        df = build().localCheckpoint(eager=True)
-        _LIVE[full_key] = df
+        df = _LIVE[full_key] = checkpoint(build())[0]
     out = df.toDF(*df.columns)
     out.createOrReplaceTempView(view)
     return out
 
 
 def materialize_once(key: str, df: DataFrame) -> DataFrame:
-    """Eagerly checkpoint `df`; free the checkpoint previously held
-    under `key`.  Returns a frame with fresh attribute ids (toDF), so
-    re-joining materializations of related lineage is safe (Spark 4.1
-    optimizer attribute-id gotcha, CLAUDE.md)."""
-    ck = df.localCheckpoint(eager=True)
-    prev = _LIVE.pop(key, None)
-    if prev is not None:
-        _free_checkpoint(prev)
-    _LIVE[key] = ck
-    return ck.toDF(*ck.columns)
+    """Checkpoint `df` under `key`, then free the checkpoint previously
+    held under it."""
+    out, _ = checkpoint(df)
+    release(key)
+    _LIVE[key] = out
+    return out
 
 
 def materialize_view(key: str, df: DataFrame, view: str) -> DataFrame:

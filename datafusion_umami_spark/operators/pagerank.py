@@ -5,8 +5,7 @@ The reference engine's only iterative surface is WITH RECURSIVE
 no fixed-point graph operator.  This implements the standard public
 PageRank iteration (Page/Brin/Motwani/Winograd, Stanford tech report
 1999) as a driver-side loop of two DataFrame passes per iteration —
-the same loop architecture as operators/connected_components.py, with
-the same checkpoint hygiene.
+the same loop architecture as operators/connected_components.py.
 
 Determinism contract: ranks are micro-units (node mass starts at
 1_000_000) and every update is integer arithmetic only —
@@ -23,8 +22,6 @@ units of total mass per round, identically on every engine.
 contribution aggregate and one broadcast-or-shuffle join of the rank
 state onto the edge list — work is O(|E|) per round with a FIXED round
 count (no convergence test ⇒ no driver-side collect at all).
-Superseded checkpoints are unpersisted each round (block-manager usage
-stays O(|V|), not O(iterations × |V|)).
 """
 
 from __future__ import annotations
@@ -32,8 +29,8 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, Window
 from pyspark.sql import functions as F
 
-from datafusion_umami_spark.operators.connected_components import _free_checkpoint
-from datafusion_umami_spark.tables import parse_bytes
+from datafusion_umami_spark.operators.materialize import checkpoint, free
+from datafusion_umami_spark.tables import conf_bytes
 
 MICRO = 1_000_000
 DAMP_NUM = 850_000  # 0.85 in micro-units
@@ -92,9 +89,9 @@ def pagerank(edges: DataFrame, iterations: int = 4) -> DataFrame:
             .distinct()
             .select("node", F.lit(MICRO).cast("long").alias("pr"))
         )
-    e = e.withColumn(
-        "outdeg", F.count("*").over(Window.partitionBy("src"))
-    ).localCheckpoint(eager=True)
+    e, _ = checkpoint(
+        e.withColumn("outdeg", F.count("*").over(Window.partitionBy("src")))
+    )
 
     # Size-gated broadcast decision, made ONCE: |state| is at most |V|
     # rows in every round, so the round-0 state's row count decides all
@@ -106,13 +103,10 @@ def pagerank(edges: DataFrame, iterations: int = 4) -> DataFrame:
     # run).  A blind hint would be the opposite mistake (|V| grows with
     # the corpus past any broadcast cap), so the hint is applied exactly
     # when ~64 B/row of state fits the session's own
-    # autoBroadcastJoinThreshold.
-    try:
-        bcast_threshold = parse_bytes(
-            e.sparkSession.conf.get("spark.sql.autoBroadcastJoinThreshold")
-        )
-    except Exception:
-        bcast_threshold = 0  # unset / unparseable -> no hint
+    # autoBroadcastJoinThreshold (unset / unparseable -> no hint).
+    bcast_threshold = conf_bytes(
+        e.sparkSession, "spark.sql.autoBroadcastJoinThreshold", 0
+    )
 
     for i in range(iterations):
         if i == 0:
@@ -139,19 +133,14 @@ def pagerank(edges: DataFrame, iterations: int = 4) -> DataFrame:
             .agg(F.sum("c").alias("mass"))
             .select(F.col("dst").alias("node"), _damped_pr("mass"))
         )
-        # Counting the checkpointed RDD materializes it — the very job
-        # an eager checkpoint runs — and hands back |state|, which a
-        # separate Dataset.count would pay a second, two-stage job for.
-        nxt_ck = nxt.localCheckpoint(eager=False)
-        n_state = nxt_ck._jdf.queryExecution().analyzed().rdd().count()
+        nxt, n_state = checkpoint(nxt)
         if i == 0:
             state_fits_broadcast = (
                 bcast_threshold > 0 and n_state * 64 < bcast_threshold
             )
         else:
-            _free_checkpoint(st_ck)
-        st_ck = nxt_ck
-        state = st_ck.toDF(*st_ck.columns)
+            free(state)
+        state = nxt
 
-    _free_checkpoint(e)
+    free(e)
     return state.select("node", "pr")

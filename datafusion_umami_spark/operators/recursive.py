@@ -14,15 +14,14 @@ UNION ALL mode accumulates every produced row; UNION (distinct) mode
 keeps only rows never seen before (the textbook transitive-closure
 termination rule).
 
-Scale notes (100 TB): each iteration is a distributed job; every delta
-is materialized with an eager `localCheckpoint`, so (a) the next step
-and every later `subtract` read stored blocks instead of recomputing the
-step lineage, and (b) the accumulated relation is a flat UNION of
-checkpointed leaves — its plan grows one leaf per iteration (linear),
-never re-deriving earlier iterations (the O(k²) recompute an
-unpersisted accumulator would pay).  No persist()/unpersist() juggling:
-checkpoint blocks stay referenced exactly as long as some returned
-DataFrame needs them.
+Scale notes (100 TB): each iteration is ONE distributed job, which
+checkpoints the delta and counts it (operators/materialize.py), so
+(a) the next step and every later `subtract` read stored blocks instead
+of recomputing the step lineage, (b) the fixpoint test needs no second
+job, and (c) the accumulated relation is a flat UNION of checkpointed
+leaves — its plan grows one leaf per iteration (linear), never
+re-deriving earlier iterations (the O(k²) recompute an unpersisted
+accumulator would pay).
 """
 
 from __future__ import annotations
@@ -30,7 +29,8 @@ from __future__ import annotations
 from collections.abc import Callable
 
 from pyspark.sql import DataFrame
-from pyspark.sql import functions as F  # noqa: F401  (re-export convenience)
+
+from datafusion_umami_spark.operators.materialize import checkpoint, free
 
 
 def recursive_cte(
@@ -52,16 +52,15 @@ def recursive_cte(
                      yields zero rows (caller must bound the recursion,
                      same as any SQL engine).
     """
-    acc = seed.localCheckpoint(eager=True)
+    acc, _ = checkpoint(seed)
     delta = acc
     for _ in range(max_iterations):
         nxt = step(delta)
         if distinct:
             nxt = nxt.subtract(acc)  # anti-join against all seen rows
-        # Eager checkpoint: materializes the delta and truncates its
-        # lineage, so acc stays a union of self-contained leaves.
-        nxt = nxt.localCheckpoint(eager=True)
-        if nxt.isEmpty():
+        nxt, rows = checkpoint(nxt)
+        if rows == 0:
+            free(nxt)
             return acc
         acc = acc.unionAll(nxt)
         delta = nxt

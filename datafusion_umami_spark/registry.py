@@ -45,9 +45,12 @@ class QuerySpec:
     # fence excludes, NULLs reaching an output NULLS clause, ...).
     # tests/test_discrimination.py asserts every pop > 0 at sf0.001 AND
     # sf0.01, so a spec whose interesting branch sits in an empty or
-    # measure-zero set can never stay hash-green silently.  NOT part of
-    # the spec fingerprint (it asserts about the DATA a fixed text runs
-    # on, not the text's semantics).
+    # measure-zero set can never stay hash-green silently.  Not hashed
+    # as a field (it asserts about the DATA a fixed text runs on, not the
+    # text's semantics), so adding one is fingerprint-neutral for SQL
+    # specs only: an `@register` spec's fingerprint is its source, which
+    # `inspect.getsource` takes with the decorator, so a new probe, tag
+    # or `bench=` there demotes the spec (checked on dedup_simhash).
     discrimination: str | None = None
 
 

@@ -14,12 +14,13 @@ from __future__ import annotations
 import atexit
 import os
 import shutil
+import socket
 import tempfile
 import weakref
 
 from pyspark.sql import DataFrame, SparkSession
 
-from datafusion_umami_spark.tables import parse_bytes
+from datafusion_umami_spark.tables import conf_bytes, conf_values
 
 
 def _scratch_base() -> str:
@@ -56,17 +57,43 @@ def scratch_root(spark: SparkSession) -> str:
     per application, so concurrent processes never remove each other's
     in-flight files.  Created on first use and removed when the process
     exits; the base is resolved once per application, so a checkpoint
-    never moves between tmpfs and disk mid-run."""
+    never moves between tmpfs and disk mid-run.  The root's `.owner`
+    names this host and pid, so the first use in a later process can
+    reclaim it if this one dies without running its exit hooks."""
     app = spark.sparkContext.applicationId
     root = _ROOTS.get(app)
     if root is None:
-        root = os.path.join(
-            _scratch_base(), f"dus_scratch_{os.getuid()}", app
-        )
+        parent = os.path.join(_scratch_base(), f"dus_scratch_{os.getuid()}")
+        _reclaim_orphans(parent)
+        root = os.path.join(parent, app)
         os.makedirs(root, exist_ok=True)
+        with open(os.path.join(root, ".owner"), "w") as f:
+            f.write(f"{socket.gethostname()} {os.getpid()}\n")
         atexit.register(shutil.rmtree, root, ignore_errors=True)
         _ROOTS[app] = root
     return root
+
+
+def _reclaim_orphans(parent: str) -> None:
+    """Remove each root under `parent` whose `.owner` names this host and
+    a pid that is gone; leave a root with no `.owner`, from another host,
+    or whose pid is alive or cannot be signalled."""
+    host = socket.gethostname()
+    try:
+        names = os.listdir(parent)
+    except OSError:
+        return
+    for name in names:
+        path = os.path.join(parent, name)
+        try:
+            with open(os.path.join(path, ".owner")) as f:
+                owner, pid = f.read().split()
+            if owner == host:
+                os.kill(int(pid), 0)
+        except ProcessLookupError:
+            shutil.rmtree(path, ignore_errors=True)
+        except (OSError, ValueError):
+            pass
 
 
 def scratch_dir(spark: SparkSession, *parts: str) -> str:
@@ -114,18 +141,17 @@ def _coalesced_state_partitions(
 ) -> int | None:
     """The adaptive override for a drain over `size` source bytes, or
     None when it would not shrink anything (unknown source size, small
-    conf)."""
+    or unreadable conf)."""
     if not size:
         return None
-    try:
-        current = int(spark.conf.get("spark.sql.shuffle.partitions"))
-        advisory = parse_bytes(
-            spark.conf.get("spark.sql.adaptive.advisoryPartitionSizeInBytes")
-        )
-    except Exception:
+    (current,) = conf_values(spark, ("spark.sql.shuffle.partitions",))
+    advisory = conf_bytes(
+        spark, "spark.sql.adaptive.advisoryPartitionSizeInBytes", 0
+    )
+    if not current.isdigit() or advisory <= 0:
         return None
     n = max(1, -(-size // advisory))  # ceil
-    return n if n < current else None
+    return n if n < int(current) else None
 
 
 _EVENTS_SCHEMA_NS = (

@@ -32,10 +32,6 @@ TABLE_NAMES = (
     "embeddings",
 )
 
-# Small dimension tables — always broadcastable (well under the 64 MiB
-# threshold even at SF100; nation/region are constant-size in TPC-H).
-BROADCAST_TABLES = frozenset({"region", "nation"})
-
 # The big fact tables of the driver schema: the only tables whose scans
 # are worth force-spreading when the file layout cannot split (see
 # _maybe_spread below), and the tables the CTE-inlining detector counts
@@ -65,6 +61,28 @@ def parse_bytes(v: str) -> int:
     sign, digits, unit = m.groups()
     n = int(digits) * 1024 ** " kmgtp".index(unit or " ")
     return -n if sign else n
+
+
+def conf_values(spark: SparkSession, keys) -> tuple[str, ...]:
+    """The session's value of each conf in `keys` as a string, "?" for
+    one whose read raises.  No-arg conf.get: Spark 4.1 type-validates a
+    provided default (CLAUDE.md gotcha)."""
+    vals = []
+    for key in keys:
+        try:
+            vals.append(str(spark.conf.get(key)))
+        except Exception:
+            vals.append("?")
+    return tuple(vals)
+
+
+def conf_bytes(spark: SparkSession, key: str, default):
+    """`parse_bytes` of the conf `key`, or `default` when the read or the
+    parse fails."""
+    try:
+        return parse_bytes(conf_values(spark, (key,))[0])
+    except ValueError:
+        return default
 
 
 def _file_identity(path: str) -> tuple | None:
@@ -115,12 +133,9 @@ def _maybe_spread(df: DataFrame, spark: SparkSession, path: str) -> DataFrame:
     size = ident[2] if ident is not None else 0
     if size < SPREAD_MIN_BYTES:
         return df
-    try:
-        max_split = parse_bytes(
-            str(spark.conf.get("spark.sql.files.maxPartitionBytes"))
-        )
-    except Exception:
-        max_split = 128 * 1024 * 1024
+    max_split = conf_bytes(
+        spark, "spark.sql.files.maxPartitionBytes", 128 * 1024 * 1024
+    )
     target = spark.sparkContext.defaultParallelism
     if math.ceil(size / max(max_split, 1)) >= target or target <= 1:
         return df
@@ -183,19 +198,6 @@ _SCHEMA_CONFS = (
 )
 
 
-def _schema_conf_key(spark: SparkSession) -> tuple:
-    """The session's values of every schema-affecting conf, as a
-    hashable cache-key component.  No-arg conf.get: Spark 4.1
-    type-validates a provided default (CLAUDE.md gotcha)."""
-    vals = []
-    for c in _SCHEMA_CONFS:
-        try:
-            vals.append(str(spark.conf.get(c)))
-        except Exception:
-            vals.append("?")
-    return tuple(vals)
-
-
 def _cached_schema(spark: SparkSession, path: str):
     """Inferred parquet schema for a single-file `path`, memoized on the
     file's identity and the session's schema confs; None when `path` is
@@ -203,7 +205,7 @@ def _cached_schema(spark: SparkSession, path: str):
     ident = _file_identity(path)
     if ident is None:
         return None
-    key = ident + _schema_conf_key(spark)
+    key = ident + conf_values(spark, _SCHEMA_CONFS)
     sch = _SCHEMA_CACHE.get(key)
     if sch is None:
         sch = spark.read.parquet(path).schema
@@ -292,16 +294,12 @@ def register_views(
     if installed is None:  # one live installation at a time
         _INSTALLED.clear()
         installed = _INSTALLED[spark] = {}
-    conf_key = _schema_conf_key(spark)
+    conf_key = conf_values(spark, _SCHEMA_CONFS)
+    (max_split,) = conf_values(spark, ("spark.sql.files.maxPartitionBytes",))
     for name in TABLE_NAMES:
         ident = _file_identity(f"{sf_dir}/{name}.parquet")
         spread_on = name in spread and name in FACT_TABLES
-        max_split = (
-            str(spark.conf.get("spark.sql.files.maxPartitionBytes"))
-            if spread_on
-            else None
-        )
-        key = (ident, spread_on, max_split, conf_key)
+        key = (ident, spread_on, max_split if spread_on else None, conf_key)
         if ident is not None and installed.get(name) == key:
             continue
         table(spark, sf_dir, name, spread=spread_on).createOrReplaceTempView(name)

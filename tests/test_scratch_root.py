@@ -88,3 +88,35 @@ def test_scratch_writes_stay_under_one_root_removed_at_exit(sf_dir, tmp_path):
     assert os.listdir(cwd) == []
     # removed at exit; the per-user parent may stay
     assert not os.path.exists(root)
+
+
+def test_first_use_reclaims_roots_of_dead_processes(tmp_path, monkeypatch):
+    """A process killed by a signal never runs its exit hook; the next
+    process's first `scratch_root` removes that root when its `.owner`
+    names this host and a pid that is gone, and keeps every other."""
+    import socket
+    from types import SimpleNamespace
+
+    from datafusion_umami_spark.streaming import runner
+
+    child = subprocess.Popen([sys.executable, "-c", "pass"])
+    child.wait()  # reaped: its pid no longer exists
+    parent = tmp_path / f"dus_scratch_{os.getuid()}"
+    owners = {
+        "dead": f"{socket.gethostname()} {child.pid}\n",
+        "live": f"{socket.gethostname()} {os.getpid()}\n",
+        "unowned": None,
+    }
+    for name, owner in owners.items():
+        (parent / name / "stream").mkdir(parents=True)
+        if owner is not None:
+            (parent / name / ".owner").write_text(owner)
+
+    monkeypatch.setenv("SPARK_GRAFT_STREAM_SCRATCH", str(tmp_path))
+    monkeypatch.setattr(runner, "_ROOTS", {})
+    spark = SimpleNamespace(sparkContext=SimpleNamespace(applicationId="app-new"))
+    root = runner.scratch_root(spark)
+
+    assert sorted(os.listdir(parent)) == ["app-new", "live", "unowned"]
+    host, pid = open(os.path.join(root, ".owner")).read().split()
+    assert (host, int(pid)) == (socket.gethostname(), os.getpid())
