@@ -57,13 +57,12 @@ PLAN_SHAPE_CONFS = (
 )
 
 
-def checkpoint(df: DataFrame, *names: str) -> tuple[DataFrame, int]:
+def checkpoint(df: DataFrame) -> tuple[DataFrame, int]:
     """Materialize and count `df` with one action; return (frame, rows).
-    The frame reads the stored blocks under fresh attribute ids, renamed
-    to `names` when given."""
+    The frame reads the stored blocks under fresh attribute ids."""
     ck = df.localCheckpoint(eager=False)
     rows = ck._jdf.queryExecution().analyzed().rdd().count()
-    return ck.toDF(*(names or ck.columns)), rows
+    return ck.toDF(*ck.columns), rows
 
 
 def free(frame: DataFrame, blocking: bool = False) -> None:

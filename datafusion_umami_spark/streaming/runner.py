@@ -12,9 +12,9 @@ Structured Streaming design point.
 from __future__ import annotations
 
 import atexit
+import fcntl
 import os
 import shutil
-import socket
 import tempfile
 import weakref
 
@@ -47,6 +47,7 @@ def _scratch_base() -> str:
 
 
 _ROOTS: dict[str, str] = {}  # applicationId -> its scratch root
+_OWNER_LOCKS: list = []  # open `.owner` files, locked until process exit
 
 
 def scratch_root(spark: SparkSession) -> str:
@@ -57,9 +58,10 @@ def scratch_root(spark: SparkSession) -> str:
     per application, so concurrent processes never remove each other's
     in-flight files.  Created on first use and removed when the process
     exits; the base is resolved once per application, so a checkpoint
-    never moves between tmpfs and disk mid-run.  The root's `.owner`
-    names this host and pid, so the first use in a later process can
-    reclaim it if this one dies without running its exit hooks."""
+    never moves between tmpfs and disk mid-run.  This process holds an
+    exclusive `flock` on the root's `.owner` until it exits, so the first
+    use in a later process can reclaim the root if this one dies without
+    running its exit hooks: the kernel drops the lock with the process."""
     app = spark.sparkContext.applicationId
     root = _ROOTS.get(app)
     if root is None:
@@ -67,18 +69,21 @@ def scratch_root(spark: SparkSession) -> str:
         _reclaim_orphans(parent)
         root = os.path.join(parent, app)
         os.makedirs(root, exist_ok=True)
-        with open(os.path.join(root, ".owner"), "w") as f:
-            f.write(f"{socket.gethostname()} {os.getpid()}\n")
+        # lock before the rename, so a visible `.owner` is always held
+        owner = open(os.path.join(root, ".owner.tmp"), "w")
+        fcntl.flock(owner, fcntl.LOCK_EX)
+        owner.write(f"{os.getpid()}\n")
+        owner.flush()
+        os.replace(owner.name, os.path.join(root, ".owner"))
+        _OWNER_LOCKS.append(owner)
         atexit.register(shutil.rmtree, root, ignore_errors=True)
         _ROOTS[app] = root
     return root
 
 
 def _reclaim_orphans(parent: str) -> None:
-    """Remove each root under `parent` whose `.owner` names this host and
-    a pid that is gone; leave a root with no `.owner`, from another host,
-    or whose pid is alive or cannot be signalled."""
-    host = socket.gethostname()
+    """Remove each root under `parent` whose `.owner` no process holds
+    locked; leave a root with no `.owner` or a held one."""
     try:
         names = os.listdir(parent)
     except OSError:
@@ -87,12 +92,9 @@ def _reclaim_orphans(parent: str) -> None:
         path = os.path.join(parent, name)
         try:
             with open(os.path.join(path, ".owner")) as f:
-                owner, pid = f.read().split()
-            if owner == host:
-                os.kill(int(pid), 0)
-        except ProcessLookupError:
-            shutil.rmtree(path, ignore_errors=True)
-        except (OSError, ValueError):
+                fcntl.flock(f, fcntl.LOCK_EX | fcntl.LOCK_NB)
+                shutil.rmtree(path, ignore_errors=True)
+        except OSError:
             pass
 
 

@@ -92,31 +92,48 @@ def test_scratch_writes_stay_under_one_root_removed_at_exit(sf_dir, tmp_path):
 
 def test_first_use_reclaims_roots_of_dead_processes(tmp_path, monkeypatch):
     """A process killed by a signal never runs its exit hook; the next
-    process's first `scratch_root` removes that root when its `.owner`
-    names this host and a pid that is gone, and keeps every other."""
-    import socket
+    process's first `scratch_root` removes that root once no process
+    holds its `.owner` locked, and keeps every other."""
+    import fcntl
     from types import SimpleNamespace
 
     from datafusion_umami_spark.streaming import runner
 
-    child = subprocess.Popen([sys.executable, "-c", "pass"])
-    child.wait()  # reaped: its pid no longer exists
     parent = tmp_path / f"dus_scratch_{os.getuid()}"
-    owners = {
-        "dead": f"{socket.gethostname()} {child.pid}\n",
-        "live": f"{socket.gethostname()} {os.getpid()}\n",
-        "unowned": None,
-    }
-    for name, owner in owners.items():
+    for name in ("dead", "live", "unowned"):
         (parent / name / "stream").mkdir(parents=True)
-        if owner is not None:
-            (parent / name / ".owner").write_text(owner)
+    for name in ("dead", "live"):
+        (parent / name / ".owner").write_text("0\n")
+    # the dead root's owner held its lock, then was killed
+    child = subprocess.Popen(
+        [sys.executable, "-c",
+         "import fcntl, sys; f = open(sys.argv[1]); "
+         "fcntl.flock(f, fcntl.LOCK_EX); print(flush=True); sys.stdin.read()",
+         str(parent / "dead" / ".owner")],
+        stdin=subprocess.PIPE, stdout=subprocess.PIPE)
+    child.stdout.readline()
+    child.kill()
+    child.wait()
+    live = open(parent / "live" / ".owner")
+    fcntl.flock(live, fcntl.LOCK_EX)
 
     monkeypatch.setenv("SPARK_GRAFT_STREAM_SCRATCH", str(tmp_path))
     monkeypatch.setattr(runner, "_ROOTS", {})
+    monkeypatch.setattr(runner, "_OWNER_LOCKS", [])
     spark = SimpleNamespace(sparkContext=SimpleNamespace(applicationId="app-new"))
-    root = runner.scratch_root(spark)
-
-    assert sorted(os.listdir(parent)) == ["app-new", "live", "unowned"]
-    host, pid = open(os.path.join(root, ".owner")).read().split()
-    assert (host, int(pid)) == (socket.gethostname(), os.getpid())
+    try:
+        root = runner.scratch_root(spark)
+        assert sorted(os.listdir(parent)) == ["app-new", "live", "unowned"]
+        assert os.listdir(root) == [".owner"]
+        assert open(os.path.join(root, ".owner")).read() == f"{os.getpid()}\n"
+        # held by this process until it exits
+        with open(os.path.join(root, ".owner")) as f:
+            try:
+                fcntl.flock(f, fcntl.LOCK_EX | fcntl.LOCK_NB)
+                raise AssertionError("new root's .owner is not locked")
+            except BlockingIOError:
+                pass
+    finally:
+        live.close()
+        for f in runner._OWNER_LOCKS:
+            f.close()
