@@ -1,4 +1,5 @@
-"""Spec fingerprints for the sweep ledger (r8 verdict item 4).
+"""Spec fingerprints and the sweep ledger: the one statement of the
+ledger rules.
 
 "Proven" must mean proven-as-written: a driver green row certifies what
 the spec the driver ran MEANS, not its name.  Each QuerySpec is
@@ -6,40 +7,65 @@ fingerprinted over its Spark SQL / docstring, its DuckDB oracle text and
 its shape (`spec_fingerprint`: `fn._sql_shape` for SQL specs, the
 callable's source for DataFrame specs — never a registrar closure), plus
 a shared salt over ALL shared semantic helpers every oracle relies on
-(`registry.dec/dsum/davg/money/ntz` — widened from dec/dsum in round 10,
-r9 ADVICE item 3, with an in-place verified ledger migration; byte-stable
-since round 1, so salting them is free until the day someone edits them
-— at which point demoting every green is exactly right).  BOUNDARY
-(explicit, not an oversight): edits to the broader shared
-infrastructure (the registrars, tables.py loading/normalization,
-operators/materialize.py, streaming/runner.py) are NOT fingerprinted —
-they changed in most rounds, so salting them would mass-demote the
-proven ledger; their correctness is instead re-proven every round by
-the full-registry sf0.01/sf0.1 verify legs (`tools/verify_subset.py`,
-recorded per round in `CORRECTNESS_r*.json`), which execute every spec
-end-to-end against DuckDB.
+(`registry.dec/dsum/davg/money/ntz`, byte-stable since round 1, so
+salting them is free until the day someone edits them — at which point
+demoting every green is exactly right).  BOUNDARY (explicit, not an
+oversight): edits to the broader shared infrastructure (the registrars,
+tables.py loading/normalization, operators/materialize.py,
+streaming/runner.py) are NOT fingerprinted — they change in most
+rounds, so salting them would mass-demote the proven ledger; their
+correctness is instead re-proven every round by the full-registry
+sf0.01/sf0.1 verify legs (`tools/verify_subset.py`), which execute every
+spec end-to-end against DuckDB.
 
 The committed ledger `queries/sweep_fingerprints.json` maps
-name -> {fp, round, sha} (sha = the swept tree the green row executed,
-r9 verdict item 2); the sweep classifier
-(`queries/__init__._driver_history`) demotes a driver-green name back
-to "unproven" whenever its CURRENT fingerprint differs from the ledger
-entry — and, fail-safe, whenever the name is MISSING from the ledger
-unless its green row is from the latest artifact AND the round-start
-blessing has not yet landed for it (fresh evidence only; once the
-ledger's max round catches up, absent == dropped and demotes).  A
-dropped ledger entry therefore re-queues a spec rather than laundering
-it into proven.  The ledger is the only proof of text: no field of a
-CORRECTNESS record decides whether the current text is proven.
+name -> {fp, round, sha}: the fingerprint of the text a green row
+proved, that row's round, and the swept tree it executed (the parent of
+the commit that added the round's CORRECTNESS artifact).
+`entry_matches` is the one comparison of an entry with a spec's current
+fingerprint.
 
-Maintenance: `tools/update_sweep_fingerprints.py`, run at ROUND START
-(before any spec edits) so newly-green rows are blessed against the text
-the driver actually swept.  The round-1..8 entries were bootstrapped from
-each round's snapshot commit (the verdict commit's parent), i.e. from the
-exact text each green row ran against.  The switch from hashing the
-registrar closure to `_sql_shape` migrated the ledger like round 10 did:
-an `fp` was rewritten only where it matched the old algorithm's
-fingerprint of the current text, so stale entries stayed stale.
+Proof — `queries.sweep_ranks`, which also orders the driver's sweep:
+  - the latest `CORRECTNESS_r*.json` record per name wins.  It passes on
+    a hash match, or as a rows-only (`no_oracle`) record with rows for a
+    spec that has no oracle NOW (an oracle added later needs a hash
+    row); any other latest record is a failure;
+  - a passing name with a ledger entry is proven only while the entry
+    matches its current fingerprint (edited after proof: unproven);
+  - a passing name with NO ledger entry is proven only while the
+    ledger's max round is behind the newest record round (the
+    round-start blessing has not landed) and only if its row comes from
+    that newest round.  Once the ledger catches up, absent means dropped
+    or refused, so the name re-queues instead of being laundered into
+    proven.
+  No field of a CORRECTNESS record decides whether the current text is
+  proven: the ledger is the only proof of text.
+
+Blessing — `tools/update_sweep_fingerprints.py`, run at ROUND START,
+before any spec edit, so each new green row is blessed against the text
+the driver swept (its preflight refuses a tree that differs from the
+swept one).  Per passing, registered name:
+  - no entry, row from the newest round -> add (current fp, row round,
+    swept sha);
+  - entry older than the row, row from the newest round -> update;
+  - no entry, or an entry older than the row, with the row from an
+    OLDER round -> skip with a warning: that sweep's text cannot be
+    recovered from the working tree, and blessing current text would
+    launder any later edit;
+  - entry not older than the row that no longer matches -> left stale
+    (edited after proof; re-queued until a later green row re-blesses
+    it);
+  - a name no longer registered is ignored (its entry stays, harmless).
+
+EVIDENCE.md (`tools/gen_evidence_table.py`) reads only the ledger and
+the current text: proven (entry matches), demoted (entry does not
+match), queued (no entry).
+
+The round-1..8 entries were bootstrapped from each round's snapshot
+commit, i.e. from the exact text each green row ran against; the
+salt-widening (round 10) and `_sql_shape` migrations rewrote an `fp`
+only where it matched the old algorithm's fingerprint of the current
+text, so stale entries stayed stale.
 """
 
 from __future__ import annotations
@@ -100,6 +126,12 @@ def spec_fingerprint(spec) -> str:  # type: ignore[no-untyped-def]
         (spec.fn.__doc__ or "", spec.oracle or "", src, _shared_salt())
     )
     return hashlib.sha256(blob.encode()).hexdigest()
+
+
+def entry_matches(entry: dict, fp: str) -> bool:
+    """Whether a ledger entry still proves the spec whose current
+    fingerprint is `fp`."""
+    return entry.get("fp") == fp
 
 
 def load_ledger(path: Path | None = None) -> dict[str, dict]:

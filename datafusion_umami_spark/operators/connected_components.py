@@ -25,7 +25,7 @@ from __future__ import annotations
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
-from datafusion_umami_spark.operators.materialize import checkpoint, free
+from datafusion_umami_spark.operators.materialize import checkpoint, free, own
 
 
 def connected_components(
@@ -105,4 +105,4 @@ def connected_components(
     )
     free(e)
     free(nodes)
-    return labels
+    return own(labels)

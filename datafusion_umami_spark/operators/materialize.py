@@ -18,8 +18,10 @@ Every checkpoint in the package is taken by `checkpoint` and freed by
   once no live frame reads it.  Fixpoint loops free a superseded round
   once the next round has materialized, so storage stays O(one round)
   on a long-lived driver, not O(iterations).  What a loop returns (CC's
-  labels, pagerank's state, recursive_cte's union of delta checkpoints)
-  is not in `_LIVE`: it stays pinned until the driver GC collects it.
+  labels, pagerank's state, each checkpoint in recursive_cte's union)
+  goes into `_LIVE` through `own`, under a key no other call uses, so
+  `release_all` and the driver's one-generation auto-free
+  (`__spark_entry__.queries()`) free it like any other checkpoint.
 - `free` is asynchronous (the next round hides the eviction);
   `blocking=True` waits, so a timed run that follows never overlaps
   eviction (bench.py calls `release_all(blocking=True)`).
@@ -35,11 +37,14 @@ multiplicative re-execution of a reduced subtree.
 
 from __future__ import annotations
 
+import itertools
+
 from pyspark.sql import DataFrame
 
 from datafusion_umami_spark.tables import FACT_TABLES, conf_values
 
 _LIVE: dict[str, DataFrame] = {}
+_OWNED = itertools.count()  # numbers the `own` keys
 
 # In-session confs that perturb physical plan shape.  ONE list, two
 # consumers (r6 ADVICE — keep them from drifting): the shared-checkpoint
@@ -76,6 +81,13 @@ def free(frame: DataFrame, blocking: bool = False) -> None:
         leaf.rdd().unpersist(blocking)
     except Exception:
         pass
+
+
+def own(frame: DataFrame) -> DataFrame:
+    """Hold a checkpoint frame a loop operator returns in `_LIVE` under a
+    fresh `loop:<n>` key; return the frame."""
+    _LIVE[f"loop:{next(_OWNED)}"] = frame
+    return frame
 
 
 def fact_scan_counts(df: DataFrame) -> dict[str, int]:

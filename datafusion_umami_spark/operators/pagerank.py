@@ -29,7 +29,7 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, Window
 from pyspark.sql import functions as F
 
-from datafusion_umami_spark.operators.materialize import checkpoint, free
+from datafusion_umami_spark.operators.materialize import checkpoint, free, own
 from datafusion_umami_spark.tables import conf_bytes
 
 MICRO = 1_000_000
@@ -143,4 +143,4 @@ def pagerank(edges: DataFrame, iterations: int = 4) -> DataFrame:
         state = nxt
 
     free(e)
-    return state.select("node", "pr")
+    return own(state).select("node", "pr")

@@ -30,7 +30,7 @@ from collections.abc import Callable
 
 from pyspark.sql import DataFrame
 
-from datafusion_umami_spark.operators.materialize import checkpoint, free
+from datafusion_umami_spark.operators.materialize import checkpoint, free, own
 
 
 def recursive_cte(
@@ -52,7 +52,7 @@ def recursive_cte(
                      yields zero rows (caller must bound the recursion,
                      same as any SQL engine).
     """
-    acc, _ = checkpoint(seed)
+    acc = own(checkpoint(seed)[0])
     delta = acc
     for _ in range(max_iterations):
         nxt = step(delta)
@@ -62,6 +62,6 @@ def recursive_cte(
         if rows == 0:
             free(nxt)
             return acc
-        acc = acc.unionAll(nxt)
+        acc = acc.unionAll(own(nxt))
         delta = nxt
     raise RuntimeError(f"recursive_cte did not converge in {max_iterations} iterations")

@@ -4,22 +4,11 @@ every query into `datafusion_umami_spark.registry.REGISTRY`.
 REGISTRATION ORDER IS LOAD-BEARING: the driver's correctness sweep walks
 the registry in insertion order under a ~50-query/round budget, so
 `_reorder_for_sweep()` below rebuilds the REGISTRY dict after all
-modules import, in three ranks:
-
-  1. queries whose latest recorded driver row FAILED (need re-proof);
-  2. unproven queries — no driver row in any `CORRECTNESS_r*.json`, or
-     a green row demoted by the fingerprint ledger — in module import
-     order;
-  3. proven greens, by ASCENDING round of their latest driver record
-     (the freshness rotation; module order breaks ties).
-
-"Proven green" means proven-AS-WRITTEN (r8 verdict item 4): a green row
-certifies the spec the driver ran, so `_driver_history` demotes any
-green name whose CURRENT fingerprint (Spark SQL + oracle + shape,
-`fingerprint.py`) differs from the committed ledger entry recorded at
-its last green row (`sweep_fingerprints.json`, maintained by
-`tools/update_sweep_fingerprints.py` at round start).  Edited specs
-re-queue ahead of proven greens until the driver re-proves the new text.
+modules import, in the order `sweep_ranks` decides: latest-record
+failures, then unproven names in registration order, then proven greens
+by ascending round of their latest record (the freshness rotation).
+What "proven" means (the ledger rules) is stated once, in
+`datafusion_umami_spark/fingerprint.py`.
 
 This is self-maintaining: each round's driver artifact is read from the
 repo root, so round N+1 automatically pushes round N's greens to the back
@@ -29,8 +18,10 @@ and pulls any new failures to the front — no manual rotation needed.
 from __future__ import annotations
 
 import json
+from collections.abc import Callable
 from pathlib import Path
 
+from datafusion_umami_spark.fingerprint import entry_matches
 from datafusion_umami_spark.queries import (  # noqa: F401
     aggregates,
     functions_nested,
@@ -79,59 +70,12 @@ from datafusion_umami_spark.queries import (  # noqa: F401
     pg_edges,
 )
 
-
-def _driver_history() -> tuple[set[str], set[str]]:
-    """(green, failed) query names across all CORRECTNESS_r*.json artifacts.
-
-    Classification uses the LATEST record per name (artifacts sort by
-    round — zero-padded filenames), so a regression after an earlier
-    pass re-enters the front of the sweep queue:
-    green  = latest record is a pass (hash match, or a rows-only check
-             that produced rows for an oracle-less spec);
-    failed = latest record is not a pass.
-
-    A rows-only record only proves a spec that is STILL oracle-less: if
-    the current spec carries an oracle (e.g. the round-6 tolerance-banded
-    approx-agg rewrites), a stale `no_oracle` record must classify the
-    name as unproven so it re-enters the front and earns a hash row
-    (r6 verdict item 1).
-
-    Two ledger-backed demotions on top (r8 verdict item 4, fingerprint.py):
-    - a green name whose CURRENT spec fingerprint differs from its
-      ledger entry is unproven (edited after proof);
-    - FAIL-SAFE: a green name MISSING from the ledger is unproven, so a
-      dropped entry re-queues a spec rather than laundering it.  The
-      one window: a green row from the LATEST artifact stays green
-      until the round-start blessing lands, i.e. while the ledger's max
-      round is behind the artifacts' max round.
-    """
-    from datafusion_umami_spark.fingerprint import load_ledger
-    from datafusion_umami_spark.registry import REGISTRY
-
-    root = Path(__file__).resolve().parents[2]
-    oracled = {n for n, spec in REGISTRY.items() if spec.oracle is not None}
-    records = _latest_records(root)
-    green, failed = _classify(records, oracled)
-    green -= _stale_edited(green)
-    ledger = load_ledger()
-    absent = {n for n in green if n not in ledger}
-    if absent:
-        max_round = max((rnd for _, rnd in records.values()), default=0)
-        ledger_max = max((e.get("round", 0) for e in ledger.values()),
-                         default=0)
-        if ledger_max >= max_round:
-            green -= absent  # blessing landed; absent == dropped/refused
-        else:
-            green -= {n for n in absent if records[n][1] != max_round}
-    return green, failed
+_ROOT = Path(__file__).resolve().parents[2]
 
 
 def _latest_records(root: Path) -> dict[str, tuple[dict, int]]:
-    """name -> (latest driver record, round of that record).
-
-    Single source of truth for artifact walking — the sweep classifier
-    and tools/update_sweep_fingerprints.py both build on it so ledger
-    blessing and sweep demotion can never drift apart."""
+    """name -> (latest driver record, round of that record), over every
+    `CORRECTNESS_r*.json` under `root`: the one artifact reader."""
     import re
 
     latest: dict[str, tuple[dict, int]] = {}
@@ -150,85 +94,96 @@ def _latest_records(root: Path) -> dict[str, tuple[dict, int]]:
     return latest
 
 
-def _classify(
-    records: dict[str, tuple[dict, int]], oracled: set[str] = frozenset()
-) -> tuple[set[str], set[str]]:
-    green, failed = set(), set()
-    for name, (rec, _rnd) in records.items():
-        rows_only_ok = (
+def _passing(
+    records: dict[str, tuple[dict, int]], oracled: set[str]
+) -> tuple[dict[str, int], int]:
+    """({name -> record round} of the names whose latest record passes,
+    newest record round).  A rows-only record passes only for a spec
+    with no oracle in `oracled`."""
+    passing = {
+        name: rnd
+        for name, (rec, rnd) in records.items()
+        if rec.get("hash_match")
+        or (
             rec.get("err") == "no_oracle"
             and rec.get("spark_rows") is not None
             and name not in oracled
         )
-        if bool(rec.get("hash_match")) or rows_only_ok:
-            green.add(name)
-        else:
-            failed.add(name)
-    return green, failed
+    }
+    return passing, max((rnd for _, rnd in records.values()), default=0)
 
 
-def _driver_history_from(
-    root: Path, oracled: set[str] = frozenset()
-) -> tuple[set[str], set[str]]:
-    """Artifact-only classification (no ledger logic) — the unit-test
-    surface for the record-walk semantics."""
-    return _classify(_latest_records(root), oracled)
+def sweep_ranks(
+    names: list[str],
+    records: dict[str, tuple[dict, int]],
+    ledger: dict[str, dict],
+    fingerprint: Callable[[str], str],
+    oracled: set[str],
+) -> tuple[list[str], set[str], set[str]]:
+    """(sweep order of `names`, green, failed) under the ledger rules of
+    fingerprint.py.
+
+    `names` is in registration order, `records` is `_latest_records`,
+    `ledger` the fingerprint ledger, `fingerprint(name)` a registered
+    spec's current fingerprint and `oracled` the names with an oracle.
+    The order is failed, then unproven in registration order, then green
+    by ascending record round, registration order breaking ties."""
+    passing, newest = _passing(records, oracled)
+    ledger_round = max((e.get("round", 0) for e in ledger.values()), default=0)
+    registered = set(names)
+
+    def proven(name: str, rnd: int) -> bool:
+        entry = ledger.get(name)
+        if entry is None:
+            return ledger_round < newest and rnd == newest
+        return name not in registered or entry_matches(entry, fingerprint(name))
+
+    green = {name for name, rnd in passing.items() if proven(name, rnd)}
+    failed = set(records) - set(passing)
+
+    def rank(name: str) -> tuple[int, int]:
+        if name in failed:
+            return 0, 0
+        if name in green:
+            return 2, passing[name]
+        return 1, 0
+
+    return sorted(names, key=rank), green, failed
 
 
-def _stale_edited(green: set[str]) -> set[str]:
-    """Green names whose CURRENT spec text no longer matches the
-    fingerprint recorded when their last driver row went green.
-
-    "Proven" means proven-as-written (r8 verdict item 4): an edit to a
-    spec's Spark SQL, oracle, or callable source after its last green
-    row demotes it to unproven so it re-queues ahead of proven greens
-    and earns a fresh driver row on the new text.  Names absent from the
-    ledger are left green (the ledger is maintained by
-    tools/update_sweep_fingerprints.py at round start)."""
+def _sweep() -> tuple[list[str], set[str], set[str]]:
+    """`sweep_ranks` over the registry, from one read of the artifacts
+    and one of the ledger."""
     from datafusion_umami_spark.fingerprint import load_ledger, spec_fingerprint
     from datafusion_umami_spark.registry import REGISTRY
 
-    ledger = load_ledger()
-    return {
-        n
-        for n in green
-        if n in ledger
-        and n in REGISTRY
-        and ledger[n].get("fp") != spec_fingerprint(REGISTRY[n])
-    }
+    oracled = {n for n, spec in REGISTRY.items() if spec.oracle is not None}
+    return sweep_ranks(
+        list(REGISTRY), _latest_records(_ROOT), load_ledger(),
+        lambda name: spec_fingerprint(REGISTRY[name]), oracled,
+    )
+
+
+def _driver_history() -> tuple[set[str], set[str]]:
+    """(green, failed) names as the sweep ranks them now."""
+    _order, green, failed = _sweep()
+    return green, failed
 
 
 def _reorder_for_sweep() -> None:
     """Rebuild REGISTRY insertion order for the driver's ~50-row sweep.
 
-    Ranks: (0) latest-record FAILs, (1) never-swept / demoted names in
-    module order, (2) proven greens by ASCENDING round of their latest
-    driver record, module order breaking ties (the FRESHNESS ROTATION,
-    r11 verdict item 2): once the unproven prefix drains, the slack
-    budget lands on the OLDEST evidence, and each re-proof rotates its
-    row to the back.  The age key is the RECORD round, not the ledger
-    blessing round (r12 review: a legitimately ledger-absent green is
-    not necessarily fresh; every green has a record by construction).
-    SLA target: no proven row's newest driver evidence older than ~6
-    rounds (~541 rows / ~31 slack slots/round ≈ 17-round full cycle,
-    front-loaded on the oldest cohorts)."""
+    Once the unproven prefix drains, the slack budget lands on the
+    OLDEST evidence, and each re-proof rotates its row to the back.
+    The age key is the RECORD round, not the ledger blessing round: a
+    ledger-absent green is not necessarily fresh, and every green has a
+    record.  SLA target: no proven row's newest driver evidence older
+    than ~6 rounds (~541 rows / ~31 slack slots/round ≈ 17-round full
+    cycle, front-loaded on the oldest cohorts)."""
     from datafusion_umami_spark.registry import REGISTRY
 
-    green, failed = _driver_history()
-    root = Path(__file__).resolve().parents[2]
-    records = _latest_records(root)
-    names = list(REGISTRY)
-    rank: dict[str, tuple[int, int, int]] = {}
-    for pos, name in enumerate(names):
-        if name in failed:
-            rank[name] = (0, 0, pos)
-        elif name not in green:
-            rank[name] = (1, 0, pos)
-        else:
-            rnd = records[name][1] if name in records else 10**6
-            rank[name] = (2, rnd, pos)
-    ordered = sorted(names, key=rank.__getitem__)
-    snapshot = {name: REGISTRY[name] for name in ordered}
+    order, _green, _failed = _sweep()
+    snapshot = {name: REGISTRY[name] for name in order}
     REGISTRY.clear()
     REGISTRY.update(snapshot)
 

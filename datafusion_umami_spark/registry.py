@@ -37,7 +37,6 @@ class QuerySpec:
     oracle: str | None  # ANSI SQL for DuckDB; None => rows-only check
     tags: tuple[str, ...] = field(default_factory=tuple)
     bench: bool = False  # include in bench.py headline set
-    module: str = ""  # module that registered the spec (sweep bookkeeping)
     # Discrimination probe (r13 verdict item 4 — the "vacuous branch"
     # defect class): DuckDB SQL over the proof tables returning
     # (branch VARCHAR, pop BIGINT) rows, one per load-bearing branch of
@@ -56,31 +55,6 @@ class QuerySpec:
 
 REGISTRY: dict[str, QuerySpec] = {}
 
-_REGISTRAR_MODULES = {
-    __name__,
-    "datafusion_umami_spark.operators.materialize",
-}
-
-
-def _registering_module() -> str:
-    """Module name of the nearest caller outside the registrar helpers.
-
-    `register_sql` / `register_split_sql` build the Spark callable inside
-    this module, so `fn.__module__` cannot identify the query module; the
-    sweep-order tests need the true origin (e.g. to pin tranche-import
-    ordering) — walk the stack past the registrar frames instead.
-    """
-    import inspect
-
-    frame = inspect.currentframe()
-    while frame is not None:
-        mod = frame.f_globals.get("__name__", "")
-        if mod not in _REGISTRAR_MODULES:
-            return mod
-        frame = frame.f_back
-    return ""
-
-
 def register(
     name: str,
     oracle: str | None = None,
@@ -88,31 +62,14 @@ def register(
     bench: bool = False,
     discrimination: str | None = None,
 ) -> Callable[[QueryFn], QueryFn]:
-    """Decorator: add a query to the registry.
-
-    `spec.module` is the nearest caller outside `_REGISTRAR_MODULES`,
-    found by walking the stack, and must be a `queries/` module — the
-    sweep-order tests separate tranche additions from the legacy backlog
-    by `spec.module`, so a silent mis-attribution (r7 ADVICE item 1)
-    would corrupt the sweep-order accounting.  Fail loudly instead.
-    """
-
-    module = _registering_module()
-    if module != "datafusion_umami_spark.queries" and not module.startswith(
-        "datafusion_umami_spark.queries."
-    ):
-        raise ValueError(
-            f"query {name!r} attributed to non-queries module {module!r}; "
-            "a registration helper outside queries/ must be listed in "
-            "registry._REGISTRAR_MODULES"
-        )
+    """Decorator: add a query to the registry."""
 
     def deco(fn: QueryFn) -> QueryFn:
         if name in REGISTRY:
             raise ValueError(f"duplicate query name {name!r}")
         REGISTRY[name] = QuerySpec(
             name=name, fn=fn, oracle=oracle, tags=tags, bench=bench,
-            module=module, discrimination=discrimination,
+            discrimination=discrimination,
         )
         return fn
 

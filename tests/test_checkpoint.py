@@ -51,3 +51,34 @@ def test_free_releases_the_renamed_frame(spark):
     free(other, blocking=True)
     free(frame, blocking=True)
     assert rdd not in _stored_ids(spark)
+
+
+def test_release_all_frees_what_loops_return(spark):
+    """Each frame a loop operator returns (CC's labels, pagerank's state,
+    recursive_cte's delta checkpoints) is held in `_LIVE` under a key of
+    its own, so `release_all` leaves none of their checkpoints stored."""
+    from pyspark.sql import functions as F
+
+    from datafusion_umami_spark.operators.connected_components import (
+        connected_components,
+    )
+    from datafusion_umami_spark.operators.materialize import release_all
+    from datafusion_umami_spark.operators.pagerank import pagerank
+    from datafusion_umami_spark.operators.recursive import recursive_cte
+
+    before = _stored_ids(spark)
+    ring = spark.createDataFrame(
+        [(i, (i + 1) % 6) for i in range(6)], "src long, dst long")
+    bidir = ring.unionAll(
+        ring.select(F.col("dst").alias("src"), F.col("src").alias("dst")))
+    seed = spark.range(1).selectExpr("id AS i")
+    results = [
+        connected_components(ring),
+        pagerank(bidir, iterations=2),
+        recursive_cte(seed, lambda d: d.where("i < 3").selectExpr("i + 1 AS i"),
+                      distinct=False),
+    ]
+    assert [r.count() for r in results] == [6, 6, 4]
+    assert len(_stored_ids(spark) - before) >= 6  # 1 + 1 + 4 leaves
+    release_all(blocking=True)
+    assert not _stored_ids(spark) - before

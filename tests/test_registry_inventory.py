@@ -19,7 +19,7 @@ README = Path(__file__).resolve().parents[1] / "README.md"
 def test_readme_status_counts_match_registry():
     text = README.read_text()
     m = re.search(
-        r"Status \(round \d+\): (\d+) registered queries \((\d+) oracle-checked, (\d+)\s*\nrows-only",
+        r"Status: (\d+) registered queries \((\d+) oracle-checked, (\d+)\s*\nrows-only",
         text,
     )
     assert m, "README status paragraph not found / format changed"
@@ -142,14 +142,16 @@ def test_every_registered_name_has_a_green_latest_record():
     notion): no latest record is a failure, and every registered name
     has a green latest record.  Checked on the data, not on a round
     number in prose, so a newly landed artifact cannot turn it red."""
-    from datafusion_umami_spark.queries import _driver_history_from
+    from datafusion_umami_spark.queries import _latest_records, _passing
 
     root = README.parent
     assert sorted(root.glob("CORRECTNESS_r*.json")), "no CORRECTNESS artifacts"
     oracled = {n for n, s in REGISTRY.items() if s.oracle is not None}
-    green, failed = _driver_history_from(root, oracled)
+    records = _latest_records(root)
+    passing, _newest = _passing(records, oracled)
+    failed = set(records) - set(passing)
     assert not failed, f"latest-record failures exist: {sorted(failed)[:5]}"
-    missing = sorted(set(REGISTRY) - green)
+    missing = sorted(set(REGISTRY) - set(passing))
     assert not missing, (
         f"{len(missing)} registered names lack a green latest record: "
         f"{missing[:5]}"

@@ -8,16 +8,10 @@ human-scannable table so any row's demotion trail is one `git log
 regenerates it in memory and requires the committed file to match
 byte-for-byte, so it can never drift from the ledger silently.
 
-Status semantics — LEDGER-pure by design (r10 verdict "What's wrong"
-item 1 class: artifact-dependent round-boundary tests redden the suite
-the moment a new CORRECTNESS file lands; this table reads ONLY the
-committed ledger + the current spec text, so a fresh driver artifact
-changes nothing until the round-start blessing runs):
-  proven   — ledger entry exists and its fingerprint matches the
-             current spec text (proven-as-written);
-  demoted  — ledger entry exists but the spec was edited after its
-             proof (fingerprint mismatch; re-queued for a fresh row);
-  queued   — no ledger entry yet (never swept, or awaiting blessing).
+Statuses (proven / demoted / queued) follow the ledger rules in
+`datafusion_umami_spark/fingerprint.py`.  The table reads ONLY the
+committed ledger and the current spec text, so a fresh driver artifact
+changes nothing until the round-start blessing runs.
 
 Deterministic: sorted by name, no timestamps.  Usage:
     python tools/gen_evidence_table.py          # writes EVIDENCE.md
@@ -36,7 +30,11 @@ OUT = ROOT / "EVIDENCE.md"
 
 
 def render() -> str:
-    from datafusion_umami_spark.fingerprint import load_ledger, spec_fingerprint
+    from datafusion_umami_spark.fingerprint import (
+        entry_matches,
+        load_ledger,
+        spec_fingerprint,
+    )
     from datafusion_umami_spark.registry import REGISTRY, _load_all
 
     _load_all()
@@ -50,7 +48,7 @@ def render() -> str:
         if ent is None:
             rnd, sha, status = "—", "—", "queued"
             queued += 1
-        elif ent.get("fp") == spec_fingerprint(REGISTRY[name]):
+        elif entry_matches(ent, spec_fingerprint(REGISTRY[name])):
             rnd, sha, status = ent["round"], ent["sha"][:10], "proven"
             by_round[rnd] = by_round.get(rnd, 0) + 1
         else:

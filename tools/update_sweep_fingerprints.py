@@ -1,42 +1,17 @@
 """Refresh queries/sweep_fingerprints.json from the driver artifacts.
 
 Run at ROUND START, before any spec edits, so each newly-green driver row
-is blessed against the text the driver actually swept (r8 verdict item 4:
-"proven" = proven-as-written).
-
-Rules per driver-green name (latest record wins — classification is
-SHARED with the sweep classifier via `queries/__init__._latest_records`
-/ `_classify`, so blessing and demotion cannot drift):
-  - no ledger entry AND green round == the latest artifact round
-    -> add (current fingerprint, green round): fresh evidence, and the
-       tool runs at round start before any edits;
-  - no ledger entry AND green round < latest artifact round
-    -> WARN and SKIP: the swept text cannot be recovered from the
-       working tree, and blessing current text would launder a
-       post-proof edit.  The classifier fail-safe keeps such names
-       unproven, so they re-queue and earn a fresh row;
-  - ledger round < green round AND green round == latest artifact ->
-    the driver re-proved on the tree the preflight just proved: update
-    fp + round + sha;
-  - ledger round < green round BUT green round < latest artifact ->
-    WARN and SKIP (r10 review): the preflight proves the tree only
-    against the LATEST swept sha, so this older row's text is as
-    unrecoverable as the missing-entry case — the stale entry stays
-    (still green if the text never changed, re-queued otherwise);
-  - ledger round == green round and fp differs -> LEAVE STALE: the spec
-    was edited after its proof; the sweep classifier re-queues it until
-    a later round's green row re-blesses it;
-  - a name no longer registered is ignored (its entry stays, harmless).
-
-The round-1..8 entries were bootstrapped from each round's snapshot
-commit (the verdict commit's parent), i.e. from the exact historical
-text each green row ran against.
+is blessed against the text the driver actually swept.  The blessing
+rules are stated with the other ledger rules in
+`datafusion_umami_spark/fingerprint.py`; `apply_blessings` implements
+them, on the passing records and newest round that the sweep order is
+built from (`queries._latest_records` / `_passing`).
 
 The blessing rests on "current tree == swept tree", and `preflight`
-PROVES it rather than assuming it (r9 verdict item 2): it refuses a
-dirty package tree and any post-sweep commit touching the package.
-Each blessed entry records the swept tree's `sha` (the parent of the
-commit that added the round's CORRECTNESS artifact).  So main():
+PROVES it rather than assuming it: it refuses a dirty package tree and
+any post-sweep commit touching the package.  Each blessed entry records
+the swept tree's `sha` (the parent of the commit that added the round's
+CORRECTNESS artifact).  So main():
   - proven tree -> bless;
   - unproven tree with latest-round greens still to bless -> REFUSE
     (exit 2), unless `--force` vouches for the swept text;
@@ -142,20 +117,6 @@ def preflight(root: Path) -> list[str]:
     return problems
 
 
-def green_rounds(root: Path, oracled: set[str]) -> tuple[dict[str, int], int]:
-    """({green name -> round of its latest record}, latest artifact round).
-
-    Reuses the classifier's own record walk and green semantics
-    (`_latest_records` / `_classify`) so the ledger can never bless a
-    name the sweep considers unproven, or vice versa."""
-    from datafusion_umami_spark.queries import _classify, _latest_records
-
-    records = _latest_records(root)
-    green, _failed = _classify(records, oracled)
-    max_round = max((rnd for _, rnd in records.values()), default=0)
-    return {n: records[n][1] for n in green}, max_round
-
-
 def main(argv: list[str] | None = None) -> int:
     ap = argparse.ArgumentParser(description=__doc__.splitlines()[0])
     ap.add_argument("--dry-run", action="store_true",
@@ -170,10 +131,11 @@ def main(argv: list[str] | None = None) -> int:
         save_ledger,
         spec_fingerprint,
     )
+    from datafusion_umami_spark.queries import _latest_records, _passing
     from datafusion_umami_spark.registry import REGISTRY
 
     oracled = {n for n, s in REGISTRY.items() if s.oracle is not None}
-    greens, max_round = green_rounds(ROOT, oracled)
+    greens, max_round = _passing(_latest_records(ROOT), oracled)
     ledger = load_ledger()
     problems = preflight(ROOT)
     for p in problems:
@@ -225,11 +187,14 @@ def main(argv: list[str] | None = None) -> int:
 
 
 def apply_blessings(ledger, greens, max_round, swept, known, current_fp):
-    """Mutate `ledger` per the blessing rules; return (added, updated,
-    stale, skipped) name lists.  Pure decision core of main(), split out
-    so the rules are unit-testable without a git repo: `known` is the
+    """Mutate `ledger` per the blessing rules (fingerprint.py); return
+    (added, updated, stale, skipped) name lists.  Pure decision core of
+    main(), split out so the rules are unit-testable without a git repo:
+    `greens` maps each passing name to its record round, `known` is the
     registered-name set, `current_fp(name)` the working-tree
     fingerprint, `swept` the sha recorded on each blessed entry."""
+    from datafusion_umami_spark.fingerprint import entry_matches
+
     added, updated, stale, skipped = [], [], [], []
     for name, rnd in sorted(greens.items()):
         if name not in known:
@@ -241,22 +206,14 @@ def apply_blessings(ledger, greens, max_round, swept, known, current_fp):
                 ledger[name] = {"fp": fp, "round": rnd, "sha": swept}
                 added.append(name)
             else:
-                skipped.append(name)  # stale missing entry: cannot
-                # recover the swept text — classifier keeps it unproven
+                skipped.append(name)  # older sweep: text unrecoverable
         elif ent.get("round", 0) < rnd:
             if rnd == max_round:
                 ledger[name] = {"fp": fp, "round": rnd, "sha": swept}
                 updated.append(name)
             else:
-                skipped.append(name)  # re-proof from an OLDER artifact:
-                # the preflight proves the tree only against the LATEST
-                # swept sha, so this row's text is as unrecoverable as
-                # the ent-is-None case above — blessing current text
-                # would launder any edit made since that older sweep.
-                # The stale entry stays; if the text is unchanged its
-                # fingerprint still matches and the name stays green,
-                # else it re-queues for a fresh row.
-        elif ent.get("fp") != fp:
+                skipped.append(name)  # older sweep: text unrecoverable
+        elif not entry_matches(ent, fp):
             stale.append(name)  # edited after proof — left for re-sweep
     return added, updated, stale, skipped
 
